@@ -589,7 +589,8 @@ object TimeSeries {
     // the inner ratio evaluated every 12h becomes a derived series,
     // and the outer max_over_time windows it tumbling per 3 days
     // ("worst 12h-sampled daily purchase/click rate ratio per 3-day
-    // window"). Shares ts57's machinery through the one slidingEval.
+    // window"). Shares ts57's machinery through the one sliding
+    // evaluator.
     "ts58_subquery_binary" ->
       q("max_over_time((rate(purchase[1d]) / rate(click[1d]))[3d:12h])",
         roundTo = 6, dedup = true) _,
@@ -616,8 +617,10 @@ object TimeSeries {
     // = ts54's grouping under ts52's per-step evaluation).
     "ts55_query_range_by" -> { (s, dir) =>
       engine(s, dir)
-        .queryRangeBy("avg_over_time(purchase[1d])", "user",
+        .queryRangeBy("avg_over_time(purchase[1d])",
+          graft.tsdb.Expr.Grouping(by = true, List("user")),
           SubStart, SubEnd, 12 * 3600 * 1000L)
+        .withColumnRenamed("user", "group")
         .withColumn("value", round(col("value"), 6))
         .orderBy("group", "timestamp")
     },
@@ -1011,14 +1014,11 @@ object TimeSeries {
     // shape with the step dimension added. Both sides are group×step
     // derived frames; the cohort side broadcasts.
     "ts106_sliding_matched" -> { (s, dir) =>
-      engineCohort(s, dir).queryRangeByMatched(
-        graft.tsdb.PromParser.parse("sum_over_time(purchase[1d])"),
+      engineCohort(s, dir).queryRangeBy(
+        "sum by (cohort, user) (sum_over_time(purchase[1d])) / " +
+          "on (cohort) group_left sum by (cohort) " +
+          "(sum_over_time(purchase[1d]))",
         graft.tsdb.Expr.Grouping(by = true, List("cohort", "user")),
-        graft.tsdb.PromParser.parse("sum_over_time(purchase[1d])"),
-        graft.tsdb.Expr.Grouping(by = true, List("cohort")),
-        graft.tsdb.Expr.Div,
-        graft.tsdb.Expr.VectorMatch(on = true, List("cohort"),
-          graft.tsdb.Expr.ManyToOne),
         SubStart, SubEnd, 12 * 3600 * 1000L)
         .select(col("cohort"), col("user"), col("timestamp"),
           round(col("value"), 9).as("value"))
@@ -1082,19 +1082,16 @@ object TimeSeries {
         .orderBy("labels")
     },
 
-    // ... and its SLIDING twin through queryRangeByMatched: the same
+    // ... and its SLIDING twin through queryRangeBy: the same
     // share-of-cohort ratio at every 12h step over 1-day windows, the
     // `without` side riding the canonical column with `on (cohort)`
     // re-opened per row.
     "ts111_sliding_matched_without" -> { (s, dir) =>
-      engineTier(s, dir).queryRangeByMatched(
-        graft.tsdb.PromParser.parse("sum_over_time(purchase[1d])"),
+      engineTier(s, dir).queryRangeBy(
+        "sum without (user) (sum_over_time(purchase[1d])) / " +
+          "on (cohort) group_left sum by (cohort) " +
+          "(sum_over_time(purchase[1d]))",
         graft.tsdb.Expr.Grouping(by = false, List("user")),
-        graft.tsdb.PromParser.parse("sum_over_time(purchase[1d])"),
-        graft.tsdb.Expr.Grouping(by = true, List("cohort")),
-        graft.tsdb.Expr.Div,
-        graft.tsdb.Expr.VectorMatch(on = true, List("cohort"),
-          graft.tsdb.Expr.ManyToOne),
         SubStart, SubEnd, 12 * 3600 * 1000L)
         .select(col("labels"), col("timestamp"),
           round(col("value"), 9).as("value"))
@@ -1128,9 +1125,8 @@ object TimeSeries {
     // STEP (ties to the group key ascending, the grouped whole-range
     // rule; ranks over the group×step frame, never a global sort).
     "ts113_sliding_topk" -> { (s, dir) =>
-      engine(s, dir).queryRangeGetK(top = true,
-        graft.tsdb.Expr.NumberLit(3),
-        graft.tsdb.PromParser.parse("sum_over_time(purchase[1d])"),
+      engine(s, dir).queryRangeBy(
+        "topk(3, sum by (user) (sum_over_time(purchase[1d])))",
         graft.tsdb.Expr.Grouping(by = true, List("user")),
         SubStart, SubEnd, 12 * 3600 * 1000L)
         .select(col("user"), col("timestamp"),
@@ -1145,9 +1141,8 @@ object TimeSeries {
     // the window). The HTTP bridge's ranged dispatch serves exactly
     // these frames.
     "ts116_sliding_limitk" -> { (s, dir) =>
-      engine(s, dir).queryRangeLimitK(
-        graft.tsdb.Expr.NumberLit(3),
-        graft.tsdb.PromParser.parse("sum_over_time(purchase[1d])"),
+      engine(s, dir).queryRangeBy(
+        "limitk(3, sum by (user) (sum_over_time(purchase[1d])))",
         graft.tsdb.Expr.Grouping(by = true, List("user")),
         SubStart, SubEnd, 12 * 3600 * 1000L)
         .select(col("user"), col("timestamp"),
@@ -1156,8 +1151,8 @@ object TimeSeries {
     },
 
     "ts117_sliding_limit_ratio" -> { (s, dir) =>
-      engine(s, dir).queryRangeLimitRatio(-0.5,
-        graft.tsdb.PromParser.parse("sum_over_time(purchase[1d])"),
+      engine(s, dir).queryRangeBy(
+        "limit_ratio(-0.5, sum by (user) (sum_over_time(purchase[1d])))",
         graft.tsdb.Expr.Grouping(by = true, List("user")),
         SubStart, SubEnd, 12 * 3600 * 1000L)
         .select(col("user"), col("timestamp"),
@@ -1172,10 +1167,9 @@ object TimeSeries {
     // (user, step) matrix, so n varies where a user lacks either
     // series in a window. Same one-scan-per-selector bound as ts101.
     "ts122_ranged_limitk_binary" -> { (s, dir) =>
-      engine(s, dir).queryRangeLimitK(
-        graft.tsdb.Expr.NumberLit(2),
-        graft.tsdb.PromParser.parse(
-          "sum_over_time(click[1d]) / sum_over_time(purchase[1d])"),
+      engine(s, dir).queryRangeBy(
+        "limitk(2, sum by (user) (sum_over_time(click[1d])) / " +
+          "sum by (user) (sum_over_time(purchase[1d])))",
         graft.tsdb.Expr.Grouping(by = true, List("user")),
         SubStart, SubEnd, 12 * 3600 * 1000L)
         .select(col("user"), col("timestamp"),
@@ -1205,15 +1199,11 @@ object TimeSeries {
     // md5 sampling text) is the many side's groups (cohort, user), so
     // the pick is deterministic and oracle-checkable per step.
     "ts123_ranged_limitk_matched" -> { (s, dir) =>
-      engineCohort(s, dir).queryRangeLimitKMatched(
-        graft.tsdb.Expr.NumberLit(2),
-        graft.tsdb.PromParser.parse("sum_over_time(purchase[1d])"),
+      engineCohort(s, dir).queryRangeBy(
+        "limitk(2, sum by (cohort, user) (sum_over_time(purchase[1d])) / " +
+          "on (cohort) group_left sum by (cohort) " +
+          "(sum_over_time(purchase[1d])))",
         graft.tsdb.Expr.Grouping(by = true, List("cohort", "user")),
-        graft.tsdb.PromParser.parse("sum_over_time(purchase[1d])"),
-        graft.tsdb.Expr.Grouping(by = true, List("cohort")),
-        graft.tsdb.Expr.Div,
-        graft.tsdb.Expr.VectorMatch(on = true, List("cohort"),
-          graft.tsdb.Expr.ManyToOne),
         SubStart, SubEnd, 12 * 3600 * 1000L)
         .select(col("cohort"), col("user"), col("timestamp"),
           round(col("value"), 9).as("value"))
@@ -1262,18 +1252,18 @@ object TimeSeries {
     // — "how many users produced exactly N purchases in the last 12h",
     // the cohort-histogram panel.
     "ts118_count_values_rate" -> { (s, dir) =>
-      engineDedup(s, dir).countValuesRange("v",
-        graft.tsdb.PromParser.parse("round(rate(purchase[1d]) * 1000)"),
+      engineDedup(s, dir).queryRange(
+        "count_values(\"v\", round(rate(purchase[1d]) * 1000))",
         SubStart, SubEnd, 6 * 3600 * 1000L)
-        .orderBy(col("v"), col("timestamp"))
+        .df.orderBy(col("v"), col("timestamp"))
     },
 
     "ts119_count_values_grouped" -> { (s, dir) =>
-      engine(s, dir).countValuesRange("v",
-        graft.tsdb.PromParser.parse(
-          "round(sum by (user) (count_over_time(purchase[12h])))"),
+      engine(s, dir).queryRange(
+        "count_values(\"v\", " +
+          "round(sum by (user) (count_over_time(purchase[12h]))))",
         SubStart, SubEnd, 12 * 3600 * 1000L)
-        .orderBy(col("v"), col("timestamp"))
+        .df.orderBy(col("v"), col("timestamp"))
     },
 
     // count_values' query_range twin (round 13): per-12h-step counts
@@ -1283,10 +1273,9 @@ object TimeSeries {
     // two surfaces agree on label text. The HTTP bridge serves exactly
     // this frame.
     "ts112_count_values_range" -> { (s, dir) =>
-      engine(s, dir).countValuesRange("v",
-        graft.tsdb.Expr.Selector("purchase", Nil, None, 0L),
+      engine(s, dir).queryRange("count_values(\"v\", purchase)",
         SubStart, SubEnd, 12 * 3600 * 1000L)
-        .orderBy(col("v"), col("timestamp"))
+        .df.orderBy(col("v"), col("timestamp"))
     },
 
     // AGGREGATE over an ALREADY-WINDOWED inner — the verdict-r12

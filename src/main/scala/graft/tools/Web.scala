@@ -6,10 +6,10 @@ import java.nio.charset.StandardCharsets
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.functions.col
 
-import graft.tsdb.{Expr, GraftDb, LabelCodec, PromParser, VType}
+import graft.tsdb.{Expr, GraftDb, LabelCodec, PromParser, TsdbEngine, VType}
 
 /** HTTP query endpoint — parity with the reference web backend
   * (tachyon_web_backend/src/main.rs:10-90):
@@ -368,353 +368,93 @@ object Web {
   private final case class PromMatrix(labels: Seq[String],
       canonical: Boolean, rows: Array[Row])
 
-  /** The ONE definition of "an already-windowed inner the sliding
-    * evaluators accept": a range function over a matrix selector or a
-    * subquery. Every promEval dispatch arm matches through this — a
-    * new admitted child shape lands here once, not at five sites.
-    */
-  private object SlidingShape {
-    def unapply(e: Expr): Option[Expr.RangeFn] = e match {
-      case rf @ Expr.RangeFn(_,
-          _: Expr.MatrixSelector | _: Expr.SubqueryMatrix, _) => Some(rf)
-      case _ => None
-    }
-  }
-
-  /** Dispatch a Prometheus-API query over the sliding evaluator.
-    * Shape mapping, documented where it deviates:
+  /** Evaluate a Prometheus-API query through the engine's one sliding
+    * evaluator. The bridge rewrites the tree only where the API's
+    * conventions differ from the engine's, picks the evaluation
+    * grouping, and makes one engine call — [[graft.tsdb.TsdbEngine]]'s
+    * `queryRange` when the tree carries no grouping (one unlabeled
+    * series), `queryRangeBy` otherwise. Conventions, documented where
+    * they deviate from Prometheus:
     *
-    *  - `rate(m[5m])` and the other sliding shapes (instant math /
-    *    binary and set composition) evaluate as-is — one unlabeled
-    *    series.
-    *  - `sum by (u) (rate(m[5m]))` → the grouped sliding evaluation:
-    *    the inner range fn runs per label group over the group's
-    *    POOLED samples (this engine's grouping convention — a group IS
-    *    one series). Over that single-series group the aggregation
-    *    family answers exactly as Prometheus does for a one-series
-    *    group: sum/avg/min/max/quantile are the identity, count is 1,
-    *    stddev/stdvar are 0.
     *  - a bare selector `m` → last sample per step within a step-sized
     *    lookback (`last_over_time(m[step])` — Prometheus' staleness
     *    lookback, with the window tied to the step instead of 5m).
-    *  - `sum by (u) (m)` → the per-step window statistic per group
-    *    (sum/avg/min/max/count/stddev/stdvar/quantile _over_time of
-    *    the group's samples in each step window).
-    *  - `without` grouping emits the engine's canonical label-set
-    *    column; the serializer decodes it back to metric fields.
-    *  - `topk(k, <grouped aggregate>)` / bottomk → the k best groups
-    *    AT EACH STEP by value (a step-partitioned rank over the
-    *    step-count × group-count frame — bounded, never a global
-    *    sort). k must be a literal.
+    *  - WITHIN-group `topk by (s) (k, m)` → its child (a selector maps
+    *    as above) under by (s): each group is ONE pooled series, so
+    *    k ≥ 1 is the identity (exactly Prometheus' one-series-group
+    *    answer) and k = 0 empties. Contrast `topk(k, sum by (s) (m))`,
+    *    the engine's across-groups ranking at each step.
+    *  - the evaluation grouping: an aggregate root evaluates under its
+    *    own clause; a binary/instant-math root under the grouping its
+    *    operand aggregates share (grouped operands must agree, and a
+    *    grouped operand composes only with literals — a grouped and an
+    *    ungrouped vector share no key in the pooled-series model); any
+    *    other tree under the first by/without clause it carries
+    *    (subqueries, samplers, matched compositions).
+    *
+    * Everything else — the pooled-series aggregation convention,
+    * count_values, on/ignoring matching, the per-step samplers — is the
+    * engine's sliding evaluation. The result's series key is every
+    * column but timestamp and value; a `without` grouping emits the
+    * canonical label-set column, which the serializer decodes back to
+    * metric fields.
     */
   private def promEval(db: GraftDb, ast: Expr, startMs: Long,
       endMs: Long, stepMs: Long): PromMatrix = {
     import graft.tsdb.Expr._
     val e = db.engine()
-    // both mappings live on the ENGINE now (TsdbEngine.windowedAgg /
-    // pooledAggPost — round 13 lifted them from here so the engine's
-    // sliding Aggregate arms and this bridge agree by construction);
-    // these are thin aliases keeping the dispatch below readable
-    def windowed(kind: AggKind): (RangeFnKind, List[Double]) =
-      graft.tsdb.TsdbEngine.windowedAgg(kind)
-    def pooledIdentity(kind: AggKind)(df: DataFrame): DataFrame =
-      graft.tsdb.TsdbEngine.pooledAggPost(kind)(df)
-    def groupCols(g: Grouping): Seq[String] =
-      if (g.by) g.labels else Seq("labels")
-    def grouped(g: Grouping, inner: Expr,
-        post: DataFrame => DataFrame = identity): PromMatrix = {
-      val cols = groupCols(g)
-      val df = post(e.queryRangeBy(inner, g, startMs, endMs, stepMs))
-      PromMatrix(cols, canonical = !g.by, df.orderBy(
-        (cols :+ "timestamp").map(col): _*).collect())
-    }
-    def ungrouped(inner: Expr,
-        post: DataFrame => DataFrame = identity): PromMatrix =
-      PromMatrix(Nil, canonical = false,
-        post(e.queryRange(inner, startMs, endMs, stepMs).output)
-          .orderBy("timestamp").collect())
-    // the grouped/ungrouped evaluation of one Aggregate node
-    def aggregate(kind: AggKind, child: Expr, g: Option[Grouping],
-        post: DataFrame => DataFrame = identity): PromMatrix =
-      (child, g) match {
-        case (SlidingShape(rf), Some(gr)) =>
-          grouped(gr, rf, df => post(pooledIdentity(kind)(df)))
-        case (sel: Selector, Some(gr)) =>
-          val (k, args) = windowed(kind)
-          grouped(gr, RangeFn(k, MatrixSelector(sel, stepMs), args), post)
-        // the UNGROUPED dashboard staples — `sum(rate(m[5m]))` over
-        // the one pooled series, `sum(m)` the per-step window
-        // statistic; both must work, not 400 with an engine error
-        case (SlidingShape(rf), None) =>
-          ungrouped(rf, df => post(pooledIdentity(kind)(df)))
-        case (sel: Selector, None) =>
-          val (k, args) = windowed(kind)
-          ungrouped(RangeFn(k, MatrixSelector(sel, stepMs), args), post)
-        case (other, _) => throw new IllegalArgumentException(
-          s"the API bridge aggregates a selector or a range function " +
-            s"over a matrix selector, got: $other")
-      }
-    // one grouped aggregate's INNER as an expression the grouped
-    // sliding evaluator can compose: selectors get their _over_time
-    // mapping; already-windowed inners are the pooled-series identity
-    // for sum/avg/min/max/quantile — kinds whose one-series answer is
-    // a TRANSFORM (count→1, stddev→0) cannot ride inside a composed
-    // tree and reject with guidance
-    def bridgeInner(kind: AggKind, child: Expr): Expr = child match {
-      case SlidingShape(rf) => kind match {
-        case AggSum | AggAvg | AggMin | AggMax => rf
-        case AggQuantile(phi) =>
-          require(phi >= 0 && phi <= 1, s"quantile φ out of [0, 1]: $phi")
-          rf
-        case other => throw new IllegalArgumentException(
-          s"$other over an already-windowed inner cannot compose " +
-            "inside binary/set expressions over the API bridge (its " +
-            "one-pooled-series answer is a constant — query it " +
-            "standalone)")
-      }
-      case sel: Selector =>
-        val (k, args) = windowed(kind)
-        RangeFn(k, MatrixSelector(sel, stepMs), args)
-      case other => throw new IllegalArgumentException(
-        s"the API bridge aggregates a selector or a range function " +
-          s"over a matrix selector, got: $other")
-    }
-    // map a COMPOSED aggregate tree — binary/set/instant math over
-    // aggregates, grouped OR ungrouped, literals welcome — into
-    // (grouping, inner expr) for ONE sliding evaluation: the ratio
-    // panels `sum by (s) (err) / sum by (s) (req)` AND the ungrouped
-    // staple `sum(rate(err[5m])) / sum(rate(req[5m]))`, the masking
-    // idiom `sum by (s) (m) unless (count by (s) (m) > 1)`. None = no
-    // aggregate anywhere in the tree (the plain sliding paths own it).
-    // An aggregate-free side (literals always; any sliding shape when
-    // the evaluation is UNGROUPED) rides along raw; grouped × raw
-    // rejects — no shared key in the pooled-series model.
-    def composedTree(e: Expr): Option[(Option[Grouping], Expr)] = e match {
-      case Aggregate(k, c, g) => Some((g, bridgeInner(k, c)))
-      case BinaryOp(kind, l, r, None) =>
+    def lastSample(sel: Selector): Expr =
+      RangeFn(FnLastOverTime, MatrixSelector(sel, stepMs), Nil)
+    // the grouping a composed root's aggregates share: the ratio panels
+    // `sum by (s) (err) / sum by (s) (req)`, the ungrouped staple
+    // `sum(rate(err[5m])) / sum(rate(req[5m]))`, the masking idiom
+    // `sum by (s) (m) unless (count by (s) (m) > 1)`. None = no
+    // aggregate at the composition level (the engine's walk decides).
+    def composedGrouping(x: Expr): Option[Option[Grouping]] = x match {
+      case Aggregate(_, _, g) => Some(g)
+      case BinaryOp(_, l, r, None) =>
         def mixed(other: Expr): Nothing = throw new IllegalArgumentException(
           s"grouped and ungrouped operands cannot compose over the " +
             s"API bridge (no shared key in the pooled-series model): " +
             s"$other")
-        // grouping equality is order-INsensitive: `sum by (a,b) (x) /
-        // sum by (b,a) (y)` is one grouping — the engine joins group
-        // columns by NAME, so label order never matters (ADVICE r12)
-        def same(a: Option[Grouping], b: Option[Grouping]): Boolean =
-          (a, b) match {
-            case (Some(x), Some(y)) =>
-              x.by == y.by && x.labels.toSet == y.labels.toSet
-            case (x, y) => x == y
-          }
-        (composedTree(l), composedTree(r)) match {
-          case (Some((gl, le)), Some((gr, re))) =>
-            require(same(gl, gr), "grouped operands must share the same " +
-              s"grouping over the API bridge: $gl vs $gr")
-            Some((gl, BinaryOp(kind, le, re)))
-          case (Some((g, le)), None) =>
-            if (g.isEmpty || r.isInstanceOf[NumberLit])
-              Some((g, BinaryOp(kind, le, r)))
-            else mixed(r)
-          case (None, Some((g, re))) =>
-            if (g.isEmpty || l.isInstanceOf[NumberLit])
-              Some((g, BinaryOp(kind, l, re)))
-            else mixed(l)
+        (composedGrouping(l), composedGrouping(r)) match {
+          case (Some(gl), Some(gr)) =>
+            require(gl.size == gr.size && gl.zip(gr).forall {
+                case (a, b) => TsdbEngine.sameGrouping(a, b) },
+              s"grouped operands must share the same grouping over the " +
+                s"API bridge: $gl vs $gr")
+            Some(gl)
+          case (Some(g), None) =>
+            if (g.isEmpty || r.isInstanceOf[NumberLit]) Some(g) else mixed(r)
+          case (None, Some(g)) =>
+            if (g.isEmpty || l.isInstanceOf[NumberLit]) Some(g) else mixed(l)
           case (None, None) => None
         }
-      case InstantFn(k, c, args) =>
-        composedTree(c).map { case (g, ce) => (g, InstantFn(k, ce, args)) }
+      case InstantFn(_, c, _) => composedGrouping(c)
       case _ => None
     }
-    // topk/bottomk k over the bridge: ALWAYS the engine's k-subplan
-    // path (scalarK — literals take its no-Spark-job fast arm), so
-    // every topk surface interprets the same k text identically
-    // (round-and-clamp; a local v.toInt here would truncate 2.9 → 2
-    // while the engine rounds → 3, review r13)
-    def kOf(kExpr: Expr): Int = e.scalarK(kExpr, startMs, endMs)
-    // the grouping a subquery inner's aggregate tree carries, if any —
-    // walked (first hit wins) so the bridge can route grouped sliding
-    // subqueries through queryRangeBy; the engine re-validates that
-    // every aggregate in the tree agrees with the evaluation grouping.
-    // DELIBERATE asymmetry with composedTree's top-level mixed()
-    // rejection: inside a subquery the ENGINE's grouped evaluator owns
-    // the semantics, where grouping DISTRIBUTES over the whole inner —
-    // an aggregate-free operand beside a grouped aggregate evaluates
-    // per group (the ts101 convention: `sum_over_time(a[1d]) /
-    // sum_over_time(b[1d])` by user groups BOTH sides); at top level
-    // the ungrouped side would evaluate POOLED (slidingEval), and
-    // pooled × grouped genuinely has no shared key
-    def subqueryGrouping(e: Expr): Option[Grouping] = e match {
-      case Aggregate(_, c, g) => g.orElse(subqueryGrouping(c))
-      case BinaryOp(_, l, r, _) =>
-        subqueryGrouping(l).orElse(subqueryGrouping(r))
-      case InstantFn(_, c, _) => subqueryGrouping(c)
-      case RangeFn(_, c, _) => subqueryGrouping(c)
-      case SubqueryMatrix(c, _, _, _) => subqueryGrouping(c)
-      case _ => None
-    }
-    // count_values anywhere in a sampler child: the sampler picks
-    // SERIES and count_values keys its output series by VALUE text, so
-    // routing it to the grouped evaluator would fail deep with a
-    // generic sliding-grouping error (advice r14) — reject up front
-    // with guidance instead
-    def containsCountValues(e0: Expr): Boolean = e0 match {
-      case Aggregate(AggCountValues(_), _, _) => true
-      case Aggregate(_, c, _) => containsCountValues(c)
-      case BinaryOp(_, l, r, _) =>
-        containsCountValues(l) || containsCountValues(r)
-      case InstantFn(_, c, _) => containsCountValues(c)
-      case RangeFn(_, c, _) => containsCountValues(c)
-      case SubqueryMatrix(c, _, _, _) => containsCountValues(c)
-      case _ => false
-    }
-    // per-step sampling dispatch shared by ranged limitk/limit_ratio
-    // (round 15): matched grouped binaries route through the engine's
-    // matched twins (series key = many-side groups + carried labels);
-    // any other child whose grouping resolves samples its grouped
-    // matrix through the queryRangeBy scope — grouped aggregates,
-    // grouped binaries and set-ops, exactly the inners the engine
-    // surface already takes
-    def rangedSample(child: Expr, op: String, hint: String)(
-        groupedInner: Grouping => DataFrame,
-        matchedInner: (Expr, Grouping, Expr, Grouping, BinKind,
-          VectorMatch) => DataFrame): PromMatrix =
-      child match {
-        case BinaryOp(kind, Aggregate(lk, lc, Some(gl)),
-            Aggregate(rk, rc, Some(gr)), Some(vm)) =>
-          val cols = e.matchedSeriesCols(gl, gr, vm)
-          val manyBy = (if (vm.card == OneToMany) gr else gl).by
-          val df = matchedInner(
-            bridgeInner(lk, lc), gl, bridgeInner(rk, rc), gr, kind, vm)
-          PromMatrix(cols, canonical = !manyBy, df.orderBy(
-            (cols :+ "timestamp").map(col): _*).collect())
-        case _ =>
-          require(!containsCountValues(child),
-            s"ranged $op samples SERIES — count_values keys series by " +
-              s"VALUE text; aggregate into label groups instead: $hint")
-          subqueryGrouping(child) match {
-            case Some(g) =>
-              val cols = groupCols(g)
-              val df = groupedInner(g)
-              PromMatrix(cols, canonical = !g.by, df.orderBy(
-                (cols :+ "timestamp").map(col): _*).collect())
-            case None => throw new IllegalArgumentException(
-              s"ranged $op samples SERIES — aggregate into groups " +
-                s"first: $hint; got child: $child")
-          }
-      }
-    // composition roots dispatch ONCE (walking twice would re-run
-    // composedTree's validation); single Aggregate roots stay on the
-    // more capable aggregate() arm (its pooledIdentity covers the
-    // count→1/stddev→0 transforms bridgeInner can't express)
-    val composed = ast match {
-      case e @ (_: BinaryOp | _: InstantFn) => composedTree(e)
-      case _ => None
-    }
-    composed match {
-      case Some((Some(g), inner)) => return grouped(g, inner)
-      case Some((None, inner)) => return ungrouped(inner)
-      case None => ()
-    }
-    ast match {
-      // MATCHED grouped composition — the share-of-parent panel:
-      // `sum by (a,b) (x) / on (a) group_left sum by (a) (y)` at every
-      // step. Each side maps through bridgeInner with its own grouping
-      // and the engine joins per (match key, step); the series labels
-      // are the MANY side's groups plus any carried labels
-      case BinaryOp(kind, Aggregate(lk, lc, Some(gl)),
-          Aggregate(rk, rc, Some(gr)), Some(vm)) =>
-        // `without` sides ride the canonical labels column (round 13 —
-        // the engine re-opens the match-key values); the serializer
-        // decodes the canonical group identity back into metric fields
-        val manyG = if (vm.card == OneToMany) gr else gl
-        require(manyG.by || vm.carry.isEmpty,
-          "label-carry onto a without-grouped many side is not " +
-            "supported over the API bridge — the carried column has " +
-            "no metric field inside the canonical identity; re-group " +
-            "the many side with `by`")
-        val df = e.queryRangeByMatched(
-          bridgeInner(lk, lc), gl, bridgeInner(rk, rc), gr,
-          kind, vm, startMs, endMs, stepMs)
-        val cols =
-          (if (manyG.by) manyG.labels else Seq("labels")) ++ vm.carry
-        PromMatrix(cols, canonical = !manyG.by, df.orderBy(
-          (cols :+ "timestamp").map(col): _*).collect())
-      case Aggregate(AggCountValues(label), inner, None) =>
-        // count_values over the bridge (round 13; general inners round
-        // 14): value-bucketed per-step counts — a bare selector counts
-        // raw samples in their unique step windows; any sliding-
-        // evaluable inner (rate, instant math, grouped aggregates)
-        // counts the derived series per step. One scan either way,
-        // series keyed by the VALUE label
-        val df = e.countValuesRange(label, inner, startMs, endMs, stepMs)
-        PromMatrix(Seq(label), canonical = false, df.orderBy(
-          col(label), col("timestamp")).collect())
-      case Aggregate(kind, child, g) =>
-        aggregate(kind, child, g)
-      case GetK(top, kExpr, agg @ Aggregate(_, _, Some(gr)), None) =>
-        // topk(k, sum by (u) (...)): the k best groups at each step —
-        // the engine's per-step rank (queryRangeGetK, round 13; its
-        // ge() Aggregate arm does the windowed/pooled translation this
-        // arm used to duplicate); k literal or scalar expression
-        val cols = groupCols(gr)
-        val df = e.queryRangeGetK(top, kExpr, agg, gr,
-          startMs, endMs, stepMs)
-        PromMatrix(cols, canonical = !gr.by, df.orderBy(
-          (cols :+ "timestamp").map(col): _*).collect())
+    val (tree, grouping, empty) = ast match {
+      case sel: Selector => (lastSample(sel), None, false)
       case GetK(_, kExpr, child, Some(g)) =>
-        // `topk by (s) (k, m)` — WITHIN-group top-k: each group is ONE
-        // pooled series, so k ≥ 1 is the identity (exactly Prometheus'
-        // one-series-group answer) and k = 0 empties; contrast with
-        // `topk(k, sum by (s) (m))`, the ACROSS-groups ranking above
-        val k = kOf(kExpr)
         val inner = child match {
-          case SlidingShape(rf) => rf
-          case sel: Selector =>
-            RangeFn(FnLastOverTime, MatrixSelector(sel, stepMs), Nil)
+          case rf @ RangeFn(_, _: MatrixSelector | _: SubqueryMatrix, _) => rf
+          case sel: Selector => lastSample(sel)
           case other => throw new IllegalArgumentException(
             s"the API bridge ranks a selector or a range function over " +
               s"a matrix selector, got: $other")
         }
-        grouped(g, inner, df => if (k <= 0) df.limit(0) else df)
-      case LimitK(kExpr, inner) =>
-        // limitk(k, <grouped matrix>) at every step — the engine's
-        // per-step md5-order sampling (round 14; general inners +
-        // matched composition round 15): same matrix shape as ranged
-        // topk, the sampling order instead of the value one. Any child
-        // whose grouping resolves routes (grouped aggregates, grouped
-        // binaries/set-ops — the queryRangeBy scope); matched grouped
-        // binaries ride the matched twin
-        rangedSample(inner, "limitk", "limitk(3, sum by (s) (m))")(
-          g => e.queryRangeLimitK(kExpr, inner, g, startMs, endMs, stepMs),
-          (l, gl, r, gr, kind, vm) => e.queryRangeLimitKMatched(
-            kExpr, l, gl, r, gr, kind, vm, startMs, endMs, stepMs))
-      case LimitRatio(ratio, inner) =>
-        rangedSample(inner, "limit_ratio",
-          "limit_ratio(0.5, sum by (s) (m))")(
-          g => e.queryRangeLimitRatio(ratio, inner, g, startMs, endMs,
-            stepMs),
-          (l, gl, r, gr, kind, vm) => e.queryRangeLimitRatioMatched(
-            ratio, l, gl, r, gr, kind, vm, startMs, endMs, stepMs))
-      case sel: Selector =>
-        ungrouped(RangeFn(FnLastOverTime, MatrixSelector(sel, stepMs), Nil))
-      case rf @ RangeFn(_, SubqueryMatrix(inner, _, _, _), _) =>
-        // sliding subquery — routes GROUPED when the inner tree holds
-        // a by/without aggregate (`quantile_over_time(0.9, sum by (s)
-        // (rate(m[5m]))[1h:5m])`): the group columns become the series
-        // labels and the engine's grouped Aggregate arm evaluates;
-        // groupless inners ride the plain ungrouped path below
-        subqueryGrouping(inner) match {
-          case Some(g) =>
-            val cols = groupCols(g)
-            val df = e.queryRangeBy(rf, g, startMs, endMs, stepMs)
-            PromMatrix(cols, canonical = !g.by, df.orderBy(
-              (cols :+ "timestamp").map(col): _*).collect())
-          case None => ungrouped(rf)
-        }
-      case other =>
-        // the sliding evaluator takes the already-parsed AST — parsing
-        // once guarantees the dispatched and evaluated trees agree
-        ungrouped(other)
+        (inner, Some(g), e.scalarK(kExpr, startMs, endMs) <= 0)
+      case _ => (ast,
+        composedGrouping(ast).getOrElse(TsdbEngine.innerGrouping(ast)), false)
     }
+    val df = grouping match {
+      case Some(g) => e.queryRangeBy(tree, g, startMs, endMs, stepMs)
+      case None => e.queryRange(tree, startMs, endMs, stepMs).output
+    }
+    val cols = df.columns.toSeq.filterNot(Set("timestamp", "value"))
+    PromMatrix(cols, canonical = grouping.exists(!_.by),
+      (if (empty) df.limit(0) else df)
+        .orderBy((cols :+ "timestamp").map(col): _*).collect())
   }
 
   /** Write one series' metric object: plain `by` labels map 1:1; the
@@ -736,6 +476,11 @@ object Web {
     val endMs = promTimeMs(params, "end")
     val stepMs = promStepMs(promParam(params, "step"))
     require(endMs >= startMs, "end < start")
+    // Prometheus' fixed resolution cap: one request may not ask the
+    // sliding evaluator for more than 11,000 steps per series
+    require((endMs - startMs) / stepMs <= 11000,
+      "exceeded maximum resolution of 11,000 points per timeseries. " +
+        "Try decreasing the query resolution (?step=XX)")
     val m = promEval(db,
       PromParser.parse(promParam(params, "query")), startMs, endMs, stepMs)
     val mapper = new ObjectMapper()

@@ -120,169 +120,396 @@ final class TsdbEngine(
     * each over the SLIDING lookback window (T - range, T] — the HTTP
     * query_range contract, vs [[query]]'s one-pass tumbling shape. The
     * selector scan extends `range` behind startMs so every window sees
-    * its full lookback. Scope ([[slidingEval]]): range functions over
-    * matrix selectors OR subqueries, optionally under instant math,
-    * binary or set composition (`rate(a[5m]) / rate(b[5m])` — each
-    * side scans once, the sides join on the step grid) — evaluating
-    * an arbitrary
-    * expression per step would re-run whole-range subplans step-count
-    * times, which is exactly the scan amplification this engine refuses
-    * to hide (the error says so).
+    * its full lookback. POOLED: every selector's samples form one
+    * series, rows are (timestamp, value) — or (value label, timestamp,
+    * value) for count_values. The accepted shapes are [[sliding]]'s.
     */
   def queryRange(promql: String, startMs: Long, endMs: Long,
       stepMs: Long): TsdbResult =
     queryRange(PromParser.parse(promql), startMs, endMs, stepMs)
 
   /** [[queryRange]] from a pre-parsed AST — the entry the Prometheus
-    * API bridge uses after dispatching on the query shape.
+    * API bridge uses for trees that carry no grouping.
     */
   def queryRange(e: Expr, startMs: Long, endMs: Long,
       stepMs: Long): TsdbResult =
-    TsdbResult(slidingEval(e, startMs, endMs, stepMs),
+    TsdbResult(sliding(e, None, startMs, endMs, stepMs),
       isScalar = false, VType.F64)
 
-  /** Sliding per-step evaluation — queryRange's body, also the inner
-    * evaluation of a subquery `expr[range:step]`. Accepted shapes:
+  /** [[queryRange]] under a `by`/`without` grouping: every group's own
+    * series at every step (label sets — one column per label — and the
+    * `without` form's canonical `labels` column). Emits (group cols...,
+    * timestamp, value); a matched (on/ignoring) tree emits its many
+    * side's groups plus carried labels. Same bounded-replication
+    * explode as the pooled form, with (group, wstart) as the one
+    * exchange key.
+    */
+  def queryRangeBy(promql: String, grouping: Grouping,
+      startMs: Long, endMs: Long, stepMs: Long): DataFrame =
+    queryRangeBy(PromParser.parse(promql), grouping, startMs, endMs, stepMs)
+
+  /** [[queryRangeBy]] from a pre-parsed AST (the Prometheus API
+    * bridge's grouped entry).
+    */
+  def queryRangeBy(parsed: Expr, grouping: Grouping,
+      startMs: Long, endMs: Long, stepMs: Long): DataFrame =
+    sliding(parsed, Some(grouping), startMs, endMs, stepMs)
+
+  /** Sliding per-step evaluation — the ONE recursion behind
+    * [[queryRange]] (`grouping` = None: the pooled series) and
+    * [[queryRangeBy]] (Some: one series per group), and the inner
+    * evaluation of a subquery `expr[range:step]`. Every arm keys its
+    * rows on the group columns plus the step timestamp (just
+    * `timestamp` when pooled). Accepted shapes:
     *
-    *  - a range function over a matrix selector (the base case),
-    *  - instant math over any accepted shape (row-local value map),
-    *  - BINARY COMPOSITION: `rate(a[5m]) / rate(b[5m])` — the
-    *    ratio-panel dashboard shape. Both sides are step-keyed derived
-    *    series on the SAME eval grid (step-count × series bounded,
-    *    metadata-sized), so an equi-join on the eval timestamp composes
-    *    them with NO scan amplification: each side scans its own
-    *    selector exactly once. Vector·vector is arithmetic-only (V2V
-    *    comparison is rejected in whole-range evaluation too); a
-    *    literal operand is row-local — arithmetic maps the value,
-    *    comparison filters keeping the value (the V2S rule). A step
+    *  - a range function over a matrix selector (the base case — one
+    *    scan, per-(group,) step sliding windows). The pooled scan reads
+    *    through select() (the catalog-typed value, lvalue for integer
+    *    streams); the grouped scan reads the raw double value beside
+    *    the group projection.
+    *  - range functions over SUBQUERIES (`max_over_time(
+    *    rate(m[5m])[1h:5m])`): the inner evaluates once over the
+    *    extended window on its own grid, the outer fn slides over the
+    *    derived frame (see the subquery arm).
+    *  - instant math and scalar-literal arithmetic/comparison — row-
+    *    local value maps (comparison filters keeping the value, the
+    *    V2S rule).
+    *  - BINARY COMPOSITION: `rate(a[5m]) / rate(b[5m])` — the ratio-
+    *    panel dashboard shape. Both sides are step-keyed derived series
+    *    on the SAME eval grid (step-count × group-count bounded,
+    *    metadata-sized), so an equi-join on the key composes them with
+    *    NO scan amplification: each side scans its own selector exactly
+    *    once. Group equality is NULL-SAFE so the missing-label group
+    *    matches itself. Vector·vector is arithmetic-only (V2V
+    *    comparison is rejected in whole-range evaluation too). A step
     *    with no row on either side (e.g. rate's ≥2-sample rule) emits
     *    nothing, like PromQL's vector matching.
-    *  - SET OPERATORS (and/or/unless) between accepted shapes — the
-    *    step grid is the match key (see the set-op arm); the masking
+    *  - SET OPERATORS (and/or/unless) on the same key — the masking
     *    idiom `rate(a[5m]) and (rate(b[5m]) > 0.2)` composes freely,
     *    including inside a subquery.
-    *  - range functions over SUBQUERIES (`max_over_time(
-    *    rate(m[5m])[1h:5m])` under query_range): the inner evaluates
-    *    once over the extended window on its own grid, the outer fn
-    *    slides over the derived frame (see the subquery arm).
+    *  - AGGREGATES whose grouping is the evaluation grouping (or none):
+    *    the pooled-series translation (see the aggregate arm).
+    *  - pooled count_values: per-(value, step) counts.
+    *  - grouped only: on/ignoring MATCHING (each side under its own
+    *    grouping, joined per (match key, step)) and the per-step
+    *    samplers topk/bottomk, limitk and limit_ratio.
     *
     * Anything else still refuses loudly: per-step re-evaluation of
     * arbitrary whole-range expressions would rescan the store once per
     * step — exactly the scan amplification this engine refuses to hide.
     */
-  private def slidingEval(e: Expr, startMs: Long, endMs: Long,
-      stepMs: Long): DataFrame = e match {
-    case RangeFn(kind, MatrixSelector(sel, rangeMs), fnArgs) =>
-      RangeFns.sliding(kind,
-        select(sel, startMs - rangeMs + 1, endMs),
-        rangeMs, stepMs, startMs, endMs, fnArgs, mode = rateMode)
-    case RangeFn(kind, SubqueryMatrix(inner, subRange, subStep, soff),
-        fnArgs) =>
-      // sliding SUBQUERY — query_range of `fn(expr[range:step])`: the
-      // inner derived series must cover every outer window
-      // (T - subRange, T] for T ∈ [start, end], so it evaluates ONCE
-      // over [start - subRange, end] on its own subStep grid (grids
-      // anchor at their evaluation start, the engine convention the
-      // whole-range subquery documents; Prometheus anchors subquery
-      // grids to absolute time — same documented deviation), and the
-      // outer fn slides over the step-count-sized derived frame. No
-      // scan amplification: the inner's selectors each scan once.
-      // `offset` shifts the inner clock and reports on the outer one.
-      val derived = reportOnOuterClock(slidingEval(inner,
-        startMs - subRange - soff, endMs - soff, subStep), soff)
-      RangeFns.sliding(kind, derived, subRange, stepMs, startMs, endMs,
-        fnArgs, mode = rateMode)
-    case InstantFn(kind, child, fnArgs) =>
-      // row-local value maps compose over the sliding vector unchanged
-      slidingEval(child, startMs, endMs, stepMs).withColumn("value",
-        TsdbEngine.instantColumn(kind, fnArgs, col("value").cast("double")))
-    case BinaryOp(kind, lhs, rhs, None)
-        if isSetOp(kind) &&
-          (lhs.isInstanceOf[NumberLit] || rhs.isInstanceOf[NumberLit]) =>
-      throw new IllegalArgumentException(
-        "set operators (and/or/unless) take vector operands, not " +
-          "scalars (the Prometheus rule)")
-    case BinaryOp(kind, NumberLit(v), rhs, None) =>
-      val r = slidingEval(rhs, startMs, endMs, stepMs)
-      if (isComparison(kind)) r.where(cmp(kind, lit(v), col("value")))
-      else r.withColumn("value",
-        arith(kind, lit(v), col("value").cast("double")))
-    case BinaryOp(kind, lhs, NumberLit(v), None) =>
-      val l = slidingEval(lhs, startMs, endMs, stepMs)
-      if (isComparison(kind)) l.where(cmp(kind, col("value"), lit(v)))
-      else l.withColumn("value",
-        arith(kind, col("value").cast("double"), lit(v)))
-    case BinaryOp(kind, lhs, rhs, None) if isSetOp(kind) =>
-      // set operators between two sliding derived series — both sides
-      // are step-keyed on the SAME eval grid (≤1 row per step), so the
-      // PromQL element-match key degenerates to the step timestamp:
-      // `and` keeps left steps that exist on the right (semi join),
-      // `unless` the complement (anti join), `or` prefers left and
-      // fills the right's uncontested steps. Each side scans its own
-      // selector exactly once — the same no-amplification property as
-      // the arithmetic composition arm; this is what makes set algebra
-      // legal INSIDE a subquery (`(a and b)[1h:5m]`).
-      val l = slidingEval(lhs, startMs, endMs, stepMs)
-        .select(col("timestamp"), col("value").cast("double").as("value"))
-      val r = slidingEval(rhs, startMs, endMs, stepMs)
-        .select(col("timestamp"), col("value").cast("double").as("value"))
-      kind match {
-        case And => l.join(r.select("timestamp"), Seq("timestamp"), "left_semi")
-        case Unless => l.join(r.select("timestamp"), Seq("timestamp"), "left_anti")
-        case _ => l.unionByName(
-          r.join(l.select("timestamp"), Seq("timestamp"), "left_anti"))
+  private def sliding(e: Expr, grouping: Option[Grouping], startMs: Long,
+      endMs: Long, stepMs: Long): DataFrame = {
+    val (gNames, gCols) = grouping.map(groupProjection).getOrElse((Nil, Nil))
+    require(grouping.isEmpty || gNames.nonEmpty,
+      "by () has no grouped form — use queryRange")
+    def rec(x: Expr): DataFrame = sliding(x, grouping, startMs, endMs, stepMs)
+    // the (groups..., timestamp) key condition against a suffix-renamed
+    // right side (the groupedBinary idiom): null-safe group equality,
+    // plain equality on timestamps (never null)
+    def keyed(r: DataFrame): (DataFrame, Column) = {
+      val rk = r.toDF(r.columns.map {
+        case "timestamp" => "_rts"
+        case "value" => "_rv"
+        case g => g + "_graft_r"
+      }.toIndexedSeq: _*)
+      (rk, (gNames.map(k => col(k) <=> col(k + "_graft_r")) :+
+        (col("timestamp") === col("_rts"))).reduce(_ && _))
+    }
+    // the series key of a sliding frame: every column but the step
+    // timestamp and the value (the group columns, or a matched
+    // composition's many-side groups plus carried labels)
+    def seriesCols(df: DataFrame): Seq[String] =
+      df.columns.toSeq.filterNot(Set("timestamp", "value"))
+    // a frame that is folded or joined per (group, step) must be keyed
+    // by exactly the evaluation's series key — a count_values frame
+    // (keyed by its value label) or a matched frame carrying labels
+    // holds SEVERAL series per key, which a pooled fold or a one-to-one
+    // join would silently merge
+    def evalKeyed(df: DataFrame, what: String): DataFrame = {
+      require(seriesCols(df).toSet == gNames.toSet,
+        s"$what must be keyed by the evaluation grouping " +
+          s"(${gNames.mkString(", ")}), got (${seriesCols(df).mkString(", ")})" +
+          " — count_values keys its series by VALUE text and a matched " +
+          "composition adds its carried labels; neither folds or joins " +
+          "per evaluation series")
+      df
+    }
+    // both operands of a vector·vector composition
+    def operands(lhs: Expr, rhs: Expr): (DataFrame, DataFrame) =
+      (evalKeyed(rec(lhs), "vector operands"),
+        evalKeyed(rec(rhs), "vector operands"))
+    // the k first rows of every step in `order` — a rank partitioned on
+    // the step timestamp over the series-count × step-count frame:
+    // bounded, never a global sort
+    def perStepFirst(df: DataFrame, k: Int, order: Seq[Column]): DataFrame =
+      if (k <= 0) df.limit(0)
+      else {
+        val rank = row_number().over(org.apache.spark.sql.expressions.Window
+          .partitionBy(col("timestamp")).orderBy(order: _*))
+        df.withColumn("_rk", rank).where(col("_rk") <= k).drop("_rk")
       }
-    case BinaryOp(kind, lhs, rhs, None) =>
-      require(!isComparison(kind),
-        "comparison between two sliding vectors is not supported " +
-          "(V2V comparison is rejected in whole-range evaluation too)")
-      val l = slidingEval(lhs, startMs, endMs, stepMs)
-        .select(col("timestamp"), col("value").cast("double").as("lv"))
-      val r = slidingEval(rhs, startMs, endMs, stepMs)
-        .select(col("timestamp"), col("value").cast("double").as("rv"))
-      l.join(r, Seq("timestamp"))
-        .select(col("timestamp"), arith(kind, col("lv"), col("rv")).as("value"))
-    case Aggregate(kind, child, None) =>
-      // AGGREGATE INNER — `sum(rate(m[5m]))` under query_range or as a
-      // subquery inner (`max_over_time(sum(rate(m[5m]))[1h:5m])`, the
-      // most-typed Prometheus rule shape): the pooled-series
-      // translation (see slidingAggregate). The child's selectors each
-      // scan once — no per-step re-evaluation.
-      val (inner, post) = slidingAggregate(kind, child, stepMs)
-      post(slidingEval(inner, startMs, endMs, stepMs))
-    case Aggregate(_, _, Some(g)) => throw new IllegalArgumentException(
-      s"grouped aggregate (${if (g.by) "by" else "without"} " +
-        s"${g.labels.mkString("(", ", ", ")")}) inside an UNGROUPED " +
-        "sliding evaluation — its group columns must appear in the " +
-        "output; evaluate through queryRangeBy/subqueryRangeBy with " +
-        "the same grouping")
-    case other => throw new IllegalArgumentException(
-      "sliding evaluation takes range functions over matrix selectors " +
-        "or subqueries, optionally under instant math, aggregation, " +
-        "binary or set " +
-        s"composition, got: $other — per-step re-evaluation of " +
-        "arbitrary expressions would rescan the store once per step; " +
-        "use query() for whole-range shapes")
-  }
-
-  /** Aggregate node admitted into sliding evaluation — the
-    * pooled-series translation the API bridge proved
-    * ([[graft.tools.Web]]'s bridgeInner/pooledIdentity), engine-native
-    * so `max_over_time(sum(rate(m[5m]))[1h:5m])` and its grouped twin
-    * evaluate on BOTH surfaces: a bare-selector child maps to the
-    * aggregation's `_over_time` twin over a step-sized window
-    * (Prometheus' staleness lookback tied to the step — the engine's
-    * documented bridge convention); an already-sliding child is ONE
-    * pooled series, so the aggregation collapses to the
-    * one-element-set answer (identity / 1 / 0) as a row-local
-    * post-map. Either way the child's selectors scan exactly once.
-    */
-  private def slidingAggregate(kind: AggKind, child: Expr,
-      stepMs: Long): (Expr, DataFrame => DataFrame) = child match {
-    case sel: Selector =>
-      val (k, args) = TsdbEngine.windowedAgg(kind)
-      (RangeFn(k, MatrixSelector(sel, stepMs), args), identity)
-    case other => (other, TsdbEngine.pooledAggPost(kind))
+    // the per-step samplers pick SERIES: they need the grouped
+    // evaluation (a pooled vector is ONE series) and one group key
+    // across the child
+    def requireSeriesChild(child: Expr, op: String, hint: String): Unit = {
+      require(!containsCountValues(child),
+        s"ranged $op samples SERIES — count_values keys series by " +
+          s"VALUE text; aggregate into label groups instead: $hint")
+      require(grouping.nonEmpty,
+        s"ranged $op samples SERIES — aggregate into groups first: " +
+          s"$hint; got child: $child")
+      requireOneInnerGrouping(child, s"ranged $op")
+    }
+    e match {
+      case RangeFn(kind, MatrixSelector(sel, rangeMs), fnArgs) =>
+        // (RangeFns.sliding rejects a grouped absent_over_time: absence
+        // is not attributable to a label value)
+        val rows =
+          if (grouping.isEmpty) select(sel, startMs - rangeMs + 1, endMs)
+          else data
+            .where(scanCond(sel, startMs - rangeMs + 1, endMs))
+            .select(gCols ++ Seq(shiftedTs(sel), col("value")): _*)
+        RangeFns.sliding(kind, rows, rangeMs, stepMs, startMs, endMs,
+          fnArgs, groupCols = gNames, mode = rateMode)
+      case RangeFn(kind, SubqueryMatrix(inner, subRange, subStep, soff),
+          fnArgs) =>
+        // sliding SUBQUERY — query_range of `fn(expr[range:step])`: the
+        // inner derived series must cover every outer window
+        // (T - subRange, T] for T ∈ [start, end], so it evaluates ONCE
+        // over [start - subRange, end] on its own subStep grid (grids
+        // anchor at their evaluation start, the engine convention the
+        // whole-range subquery documents; Prometheus anchors subquery
+        // grids to absolute time — same documented deviation), and the
+        // outer fn slides over the step-count-sized derived frame. No
+        // scan amplification: the inner's selectors each scan once.
+        // `offset` shifts the inner clock and reports on the outer one.
+        // Grouped, a FINER `by` inner grouping (round 14 —
+        // `max_over_time(sum by (a,b) (...)[1h:5m])` evaluated by (a))
+        // evaluates per ITS grouping (first keyed group-by), drops the
+        // extra label columns, and the outer fn's (group, wstart) fold
+        // is the second keyed group-by — each evaluation group pools
+        // its sub-series' samples, the pooled-series rule applied to
+        // the derived frame. Any other extra key column (a count_values
+        // or label-carrying inner) rejects: the fold would pool series
+        // the evaluation never grouped.
+        val innerStart = startMs - subRange - soff
+        val derived = grouping match {
+          case None => sliding(inner, None, innerStart, endMs - soff, subStep)
+          case Some(g) =>
+            val ig = finerInnerGrouping(inner, g)
+            val all = sliding(inner, Some(ig), innerStart, endMs - soff,
+              subStep)
+            if (ig eq g) all else projectInnerGroups(all, ig, gNames)
+        }
+        RangeFns.sliding(kind,
+          reportOnOuterClock(evalKeyed(derived, "a subquery inner"), soff),
+          subRange, stepMs, startMs, endMs, fnArgs, groupCols = gNames,
+          mode = rateMode)
+      case InstantFn(kind, child, fnArgs) =>
+        // row-local value maps compose over the sliding vector unchanged
+        rec(child).withColumn("value",
+          TsdbEngine.instantColumn(kind, fnArgs, col("value").cast("double")))
+      case BinaryOp(kind, lhs, rhs, None)
+          if isSetOp(kind) &&
+            (lhs.isInstanceOf[NumberLit] || rhs.isInstanceOf[NumberLit]) =>
+        throw new IllegalArgumentException(
+          "set operators (and/or/unless) take vector operands, not " +
+            "scalars (the Prometheus rule)")
+      case BinaryOp(kind, NumberLit(v), rhs, None) =>
+        val r = rec(rhs)
+        if (isComparison(kind)) r.where(cmp(kind, lit(v), col("value")))
+        else r.withColumn("value",
+          arith(kind, lit(v), col("value").cast("double")))
+      case BinaryOp(kind, lhs, NumberLit(v), None) =>
+        val l = rec(lhs)
+        if (isComparison(kind)) l.where(cmp(kind, col("value"), lit(v)))
+        else l.withColumn("value",
+          arith(kind, col("value").cast("double"), lit(v)))
+      case BinaryOp(kind, lhs, rhs, None) if isSetOp(kind) =>
+        // `and` keeps left rows whose key exists on the right (semi
+        // join), `unless` the complement (anti join), `or` prefers left
+        // and fills the right's uncontested keys. Each side scans its
+        // own selector exactly once — the same no-amplification property
+        // as the arithmetic arm; this is what makes set algebra legal
+        // INSIDE a subquery (`(a and b)[1h:5m]`).
+        val (l, r) = operands(lhs, rhs)
+        kind match {
+          case And => val (rk, cond) = keyed(r); l.join(rk, cond, "left_semi")
+          case Unless =>
+            val (rk, cond) = keyed(r); l.join(rk, cond, "left_anti")
+          case _ =>
+            val (lk, cond) = keyed(l)
+            // the anti-join probes the LEFT's keys from the right side;
+            // select the right's columns BY NAME into keyed()'s
+            // left-role layout (a positional rename would silently
+            // mislabel if a future arm emitted a different order)
+            l.unionByName(r.select((gNames :+ "timestamp" :+ "value")
+              .map(col): _*).join(
+              lk.select((gNames.map(_ + "_graft_r") :+ "_rts").map(col): _*),
+              cond, "left_anti"))
+        }
+      case BinaryOp(kind, lhs, rhs, None) =>
+        require(!isComparison(kind),
+          "comparison between two sliding vectors is not supported " +
+            "(the V2V rule — rejected in whole-range evaluation too)")
+        val (l, r) = operands(lhs, rhs)
+        val (rk, cond) = keyed(r)
+        l.join(rk, cond).select(gNames.map(col) ++ Seq(col("timestamp"),
+          arith(kind, col("value").cast("double"),
+            col("_rv").cast("double")).as("value")): _*)
+      case BinaryOp(kind, lhs, rhs, Some(m)) =>
+        // MATCHED composition — the share-of-parent panel OVER TIME:
+        // `sum by (a, b) (x) / on (a) group_left sum by (a) (y)` at every
+        // step. Each side evaluates under ITS OWN grouping (`by` or
+        // `without` — the canonical string re-opens into the match-key
+        // values) and the sides join per (match key, step) under
+        // exactly groupedBinaryMatched's acceptance rules, carry-tuple
+        // uniqueness enforced per (key, step) on the executors. The
+        // output series are the many side's groups plus carried labels,
+        // so the evaluation grouping must be the many side's. Both
+        // frames are group-count × step-count sized; the 'one' side
+        // broadcasts.
+        def groupingOf(x: Expr): Grouping =
+          TsdbEngine.innerGrouping(x).getOrElse(
+            throw new IllegalArgumentException(
+              "on/ignoring requires two grouped (by) operands — group " +
+                "both sides, e.g. sum by (a, b) (x) / on (a) group_left " +
+                "sum by (a) (y)"))
+        val (gl, gr) = (groupingOf(lhs), groupingOf(rhs))
+        val manyG = if (m.card == OneToMany) gr else gl
+        require(grouping.exists(TsdbEngine.sameGrouping(_, manyG)),
+          s"on/ignoring composition emits its many side's groups " +
+            s"($manyG) — evaluate it through queryRangeBy with that " +
+            s"grouping, not ${grouping.getOrElse("the pooled queryRange")}")
+        def side(x: Expr, g: Grouping): DataFrame =
+          sliding(x, Some(g), startMs, endMs, stepMs)
+        matchedGroupedJoin(kind, side(lhs, gl), groupProjection(gl)._1,
+          side(rhs, gr), groupProjection(gr)._1, m, timeKey = true)
+      case Aggregate(AggCountValues(label), inner, None) if grouping.isEmpty =>
+        // count_values per step: value-bucketed counts, series keyed by
+        // the VALUE label. A bare Selector counts raw SAMPLES: ONE scan
+        // over (start - step, end], each sample assigned to its UNIQUE
+        // step window (step-sized lookbacks tile the range). Any other
+        // inner counts the derived SERIES at each step, evaluated under
+        // the grouping it carries (one series per group per step). The
+        // value renders through the same string cast the whole-range
+        // AggCountValues arm uses, so the surfaces agree on label text;
+        // output is (label, timestamp, value), group-count × step-count
+        // bounded, no per-step rescan.
+        requireValueLabel(label, Nil)
+        val perStep = inner match {
+          case sel: Selector =>
+            val off = pmod(col("timestamp") - startMs, lit(stepMs))
+            val stepTs = when(off === 0, col("timestamp"))
+              .otherwise(col("timestamp") + (lit(stepMs) - off))
+            select(sel, startMs - stepMs + 1, endMs)
+              .select(stepTs.as("timestamp"), col("value"))
+              .where(col("timestamp") >= startMs && col("timestamp") <= endMs)
+          case _ =>
+            requireOneInnerGrouping(inner, "count_values over a derived inner")
+            sliding(inner, TsdbEngine.innerGrouping(inner), startMs, endMs,
+              stepMs).select(col("timestamp"), col("value"))
+        }
+        perStep
+          .groupBy(col("value").cast("string").as(label), col("timestamp"))
+          .agg(count(lit(1)).cast("double").as("value"))
+          .select(col(label), col("timestamp"), col("value"))
+      case Aggregate(kind, child, g) =>
+        // AGGREGATE INNER — `sum(rate(m[5m]))` / `sum by (s)
+        // (rate(m[5m]))` under query_range or as a subquery inner
+        // (`max_over_time(sum(rate(m[5m]))[1h:5m])`, the most-typed
+        // Prometheus rule shape). Legal when the node's grouping IS the
+        // evaluation grouping (label ORDER never matters — group columns
+        // join by name); a groupless aggregate rides a grouped
+        // evaluation too, which already pools each group's samples. A
+        // DIFFERENT grouping would need a second group-by level per
+        // step. The pooled-series translation: a bare-selector child
+        // maps to the aggregation's `_over_time` twin over a step-sized
+        // window (Prometheus' staleness lookback tied to the step — the
+        // engine's documented bridge convention); an already-sliding
+        // child is ONE pooled series, so the aggregation collapses to
+        // the one-element-set answer (identity / 1 / 0) as a row-local
+        // post-map — only over a child keyed by the evaluation grouping
+        // (`count(count_values("v", m))` would count 1 per value series).
+        // Either way the child's selectors scan exactly once.
+        grouping match {
+          case None => g.foreach { x => throw new IllegalArgumentException(
+            s"grouped aggregate (${if (x.by) "by" else "without"} " +
+              s"${x.labels.mkString("(", ", ", ")")}) inside an UNGROUPED " +
+              "sliding evaluation — its group columns must appear in the " +
+              "output; evaluate through queryRangeBy/subqueryRangeBy with " +
+              "the same grouping") }
+          case Some(eg) =>
+            require(g.forall(TsdbEngine.sameGrouping(_, eg)),
+              s"aggregate grouping $g differs from the evaluation " +
+                s"grouping $eg — sliding evaluation carries ONE group " +
+                "key; under a SUBQUERY a finer `by` superset pools into " +
+                "the evaluation grouping at the outer fold (round 14), " +
+                "otherwise re-group the outer evaluation to match")
+        }
+        child match {
+          case sel: Selector =>
+            val (k, args) = TsdbEngine.windowedAgg(kind)
+            rec(RangeFn(k, MatrixSelector(sel, stepMs), args))
+          case other => TsdbEngine.pooledAggPost(kind)(
+            evalKeyed(rec(other), "an aggregate's child"))
+        }
+      case GetK(top, kExpr, child, None) if grouping.nonEmpty =>
+        // topk/bottomk OVER TIME — the "top k series per step" panel:
+        // a per-STEP rank keeping the k best series at each step (ties
+        // break on the series key ascending, the grouped whole-range
+        // rule). k follows GetK's k-subplan contract ([[scalarK]] — a
+        // 1-row whole-range collect, the reference's own k shape).
+        requireSeriesChild(child, "topk/bottomk", "topk(3, sum by (s) (m))")
+        val k = scalarK(kExpr, startMs, endMs)
+        val df = rec(child)
+        perStepFirst(df, k,
+          (if (top) col("value").desc else col("value").asc) +:
+            seriesCols(df).map(col(_).asc))
+      case LimitK(kExpr, child) =>
+        // limitk OVER TIME: the whole-range LimitK arm's md5-order rule
+        // applied PER STEP, so each evaluation samples among the series
+        // present at that step (the Prometheus per-evaluation contract:
+        // a series with no samples in a step's window doesn't occupy
+        // one of the k slots there). For a matched child the series key
+        // (and so the md5 text) is the many side's groups plus carried
+        // labels — a `without` many side's canonical string is itself
+        // deterministic text, so the pick stays oracle-checkable.
+        requireSeriesChild(child, "limitk", "limitk(3, sum by (s) (m))")
+        val k = scalarK(kExpr, startMs, endMs)
+        val df = rec(child)
+        perStepFirst(df, k, sampleOrderFor(seriesCols(df)))
+      case LimitRatio(r, child) =>
+        // limit_ratio OVER TIME — per-step rank AND per-step count over
+        // the same timestamp-partitioned window; r >= 0 keeps the first
+        // round(r*n_step) series in md5 order, r < 0 the exact
+        // complement (rk > round((1+r)*n_step)), so limit_ratio(r) and
+        // limit_ratio(r-1) partition each step exactly — including
+        // steps where n varies because a series has no samples in the
+        // window.
+        requireSeriesChild(child, "limit_ratio",
+          "limit_ratio(0.5, sum by (s) (m))")
+        val df = rec(child)
+        require(r >= -1 && r <= 1, s"limit_ratio takes r in [-1, 1], got $r")
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("timestamp"))
+        val ranked = df
+          .withColumn("_rk",
+            row_number().over(w.orderBy(sampleOrderFor(seriesCols(df)): _*)))
+          .withColumn("_n", count(lit(1)).over(w))
+        val kept =
+          if (r >= 0) ranked.where(col("_rk") <= round(lit(r) * col("_n")))
+          else ranked.where(col("_rk") > round(lit(1 + r) * col("_n")))
+        kept.drop("_rk", "_n")
+      case other => throw new IllegalArgumentException(
+        "sliding evaluation takes range functions over matrix selectors " +
+          "or subqueries, optionally under instant math, aggregation, " +
+          "binary or set composition (grouped: also on/ignoring matching " +
+          s"and the topk/limitk/limit_ratio samplers), got: $other — " +
+          "per-step re-evaluation of arbitrary expressions would rescan " +
+          "the store once per step; use query() for whole-range shapes")
+    }
   }
 
   /** The deterministic sampling order limitk/limit_ratio share: md5
@@ -323,9 +550,10 @@ final class TsdbEngine(
   /** GetK's k-subplan: evaluate whole-range, require a single scalar,
     * 1-row collect (the reference evaluates the k subplan first,
     * get_k.rs:77-79 — k is ONE number, so the single-value collect
-    * mirrors that), round, clamp at 0. Shared by eval's GetK arm and
-    * the Prometheus API bridge's topk/bottomk dispatch (which accepts
-    * `topk(scalar(count(m)), ...)` through exactly this path).
+    * mirrors that), round, clamp at 0. Shared by eval's GetK arm, the
+    * sliding samplers, and the Prometheus API bridge's within-group
+    * topk/bottomk (which accepts `topk by (s) (scalar(count(m)), ...)`
+    * through exactly this path).
     */
   def scalarK(kExpr: Expr, startMs: Long, endMs: Long): Int = kExpr match {
     case NumberLit(v) =>
@@ -350,91 +578,36 @@ final class TsdbEngine(
     })).toInt
   }
 
-  /** count_values' query_range twin (the API bridge's per-step model).
-    * A bare Selector counts raw SAMPLES: ONE scan over
-    * (start - step, end], each sample assigned to its UNIQUE step
-    * window (step-sized lookbacks tile the range), then
-    * per-(step, value-string) counts. Any other inner the sliding
-    * machinery accepts (round 14 — rate/instant-fn/arithmetic trees,
-    * grouped aggregates) counts the derived SERIES at each step:
-    * grouped inners evaluate through [[queryRangeBy]] (one series per
-    * group per step), groupless ones through the pooled sliding
-    * evaluator. Either way the value renders through the same string
-    * cast the whole-range AggCountValues arm uses, so the surfaces
-    * agree on label text; output stays (label, timestamp, value),
-    * group-count × step-count bounded, no per-step rescan.
+  /** The agreement check behind [[TsdbEngine.innerGrouping]]'s
+    * first-hit walk (advice r14): a mixed inner like `sum by (a) (x) /
+    * sum by (b) (y)` used to dispatch under by(a) and fail deep inside
+    * the grouped sliding evaluator with a subquery-oriented message.
     */
-  def countValuesRange(label: String, inner: Expr, startMs: Long,
-      endMs: Long, stepMs: Long): DataFrame = {
-    requireValueLabel(label, Nil)
-    val perStep = inner match {
-      case sel: Selector =>
-        val off = pmod(col("timestamp") - startMs, lit(stepMs))
-        val stepTs = when(off === 0, col("timestamp"))
-          .otherwise(col("timestamp") + (lit(stepMs) - off))
-        select(sel, startMs - stepMs + 1, endMs)
-          .select(stepTs.as("timestamp"), col("value"))
-          .where(col("timestamp") >= startMs && col("timestamp") <= endMs)
-      case _ =>
-        requireOneInnerGrouping(inner, "count_values over a derived inner")
-        innerGrouping(inner) match {
-          case Some(g) =>
-            queryRangeBy(inner, g, startMs, endMs, stepMs)
-              .select(col("timestamp"), col("value"))
-          case None =>
-            slidingEval(inner, startMs, endMs, stepMs)
-              .select(col("timestamp"), col("value"))
-        }
-    }
-    perStep
-      .groupBy(col("value").cast("string").as(label), col("timestamp"))
-      .agg(count(lit(1)).cast("double").as("value"))
-      .select(col(label), col("timestamp"), col("value"))
-  }
-
-  /** The grouping an inner tree evaluates under (the API bridge's
-    * subqueryGrouping rule): the first by/without clause found walking
-    * the composition — the convention that an aggregate-free operand
-    * beside a grouped aggregate evaluates per group.
-    */
-  private def innerGrouping(e: Expr): Option[Grouping] = e match {
-    case Aggregate(_, c, g) => g.orElse(innerGrouping(c))
-    case BinaryOp(_, l, r, _) =>
-      innerGrouping(l).orElse(innerGrouping(r))
-    case InstantFn(_, c, _) => innerGrouping(c)
-    case RangeFn(_, c, _) => innerGrouping(c)
-    case SubqueryMatrix(c, _, _, _) => innerGrouping(c)
-    case _ => None
-  }
-
-  /** EVERY grouping an inner tree carries at its composition level —
-    * the agreement check behind [[innerGrouping]]'s first-hit walk
-    * (advice r14): a mixed inner like `sum by (a) (x) / sum by (b)
-    * (y)` used to dispatch under by(a) and fail deep inside the
-    * grouped sliding evaluator with a subquery-oriented message.
-    * Descent stops at an aggregate's OWN clause (a finer grouping
-    * nested under it is the legal subquery-pooling case, validated
-    * where it evaluates).
-    */
-  private def innerGroupings(e: Expr): Seq[Grouping] = e match {
-    case Aggregate(_, c, g) => g.map(Seq(_)).getOrElse(innerGroupings(c))
-    case BinaryOp(_, l, r, _) => innerGroupings(l) ++ innerGroupings(r)
-    case InstantFn(_, c, _) => innerGroupings(c)
-    case RangeFn(_, c, _) => innerGroupings(c)
-    case SubqueryMatrix(c, _, _, _) => innerGroupings(c)
-    case _ => Nil
-  }
-
   private def requireOneInnerGrouping(inner: Expr, what: String): Unit = {
-    val gs = innerGroupings(inner)
+    val gs = TsdbEngine.innerGroupings(inner)
       .map(g => (g.by, g.labels.toSet)).distinct
     require(gs.size <= 1,
       s"$what needs ONE grouping across the inner composition — " +
         s"found ${gs.map { case (by, ls) =>
           (if (by) "by" else "without") + ls.mkString("(", ", ", ")")
         }.mkString(" vs ")}; aggregate the operands to a shared key " +
-        "(matched on/ignoring composition routes through the matched " +
-        "query_range surface instead)")
+        "(or match them with on/ignoring)")
+  }
+
+  /** count_values anywhere in a sampler child: the samplers pick SERIES
+    * and count_values keys its output series by VALUE text, so it is
+    * rejected up front with guidance instead of failing deep with a
+    * generic sliding-grouping error (advice r14).
+    */
+  private def containsCountValues(e: Expr): Boolean = e match {
+    case Aggregate(AggCountValues(_), _, _) => true
+    case Aggregate(_, c, _) => containsCountValues(c)
+    case BinaryOp(_, l, r, _) =>
+      containsCountValues(l) || containsCountValues(r)
+    case InstantFn(_, c, _) => containsCountValues(c)
+    case RangeFn(_, c, _) => containsCountValues(c)
+    case SubqueryMatrix(c, _, _, _) => containsCountValues(c)
+    case _ => false
   }
 
   /** The grouping a subquery INNER evaluates under when it differs
@@ -448,9 +621,8 @@ final class TsdbEngine(
     * the projection.
     */
   private def finerInnerGrouping(inner: Expr, grouping: Grouping): Grouping =
-    innerGrouping(inner) match {
-      case Some(x) if !(x.by == grouping.by &&
-          x.labels.toSet == grouping.labels.toSet) =>
+    TsdbEngine.innerGrouping(inner) match {
+      case Some(x) if !TsdbEngine.sameGrouping(x, grouping) =>
         if (!x.by && grouping.by) {
           // a `without` inner under a `by` evaluation (round 15): the
           // inner's canonical groups each CARRY the evaluation labels'
@@ -659,7 +831,7 @@ final class TsdbEngine(
       // `offset` shifts the inner evaluation range back and reports on
       // the outer clock — the step grid stays aligned to `start`.
       val derived = reportOnOuterClock(
-        slidingEval(inner, start - soff, end - soff, subStep), soff)
+        sliding(inner, None, start - soff, end - soff, subStep), soff)
       TsdbResult(
         RangeFns(kind, derived, subRange, start, end, fnArgs, rateMode),
         isScalar = false, VType.F64)
@@ -1366,7 +1538,7 @@ final class TsdbEngine(
 
   /** The on/ignoring + group_left/group_right join core, shared by the
     * whole-range matched binary and the SLIDING matched composition
-    * ([[queryRangeByMatched]] — `timeKey = true` adds the step
+    * ([[sliding]]'s matched arm — `timeKey = true` adds the step
     * timestamp to the join key and the carry-uniqueness fold, so
     * matching is per (match key, step)). Acceptance rules are
     * identical; both operand frames are post-aggregation
@@ -1425,8 +1597,8 @@ final class TsdbEngine(
     // checks below compare against manyCols, which is just
     // Seq("labels") when canonical — a carried label already present
     // INSIDE the canonical string would emit two values for one label
-    // name. The bridge rejects this at its surface; reject here too so
-    // direct engine callers are equally guarded (advice r14).
+    // name — so every surface (the API bridge included) rejects it
+    // here (advice r14).
     require(!manyCanonical || carry.isEmpty,
       "label-carry onto a without-grouped many side is not supported — " +
         "the carried label cannot be proven absent from the canonical " +
@@ -1662,7 +1834,9 @@ final class TsdbEngine(
 
   /** Grouped aggregates — the `sum by (label)` extension the reference
     * parses but ignores (SURVEY §2 row 7): per-label-value whole-range
-    * aggregation over a selector. Returns (group, value) rows.
+    * aggregation over a selector, exactly the string surface's `kind by
+    * (labelKey) (selector)` with the key column named `group`. Returns
+    * (group, value) rows.
     */
   def aggregateBy(selector: String, kind: AggKind, labelKey: String,
       startMs: Long, endMs: Long): DataFrame = {
@@ -1670,17 +1844,8 @@ final class TsdbEngine(
       case s: Selector => s
       case other => throw new IllegalArgumentException(s"not a selector: $other")
     }
-    val rows = data
-      .where(scanCond(sel, startMs, endMs))
-      .select(element_at(col("labels"), labelKey).as("group"), col("value"))
-    val aggCol = kind match {
-      case AggSum => sum(col("value"))
-      case AggCount => count(lit(1)).cast("double")
-      case AggAvg => avg(col("value"))
-      case AggMin => min(col("value"))
-      case AggMax => max(col("value"))
-    }
-    rows.groupBy("group").agg(aggCol.as("value"))
+    groupedAggregate(kind, sel, Grouping(by = true, List(labelKey)),
+      startMs, endMs).df.withColumnRenamed(labelKey, "group")
   }
 
   /** Grouped range functions — the `by (label)` extension applied to the
@@ -1711,342 +1876,14 @@ final class TsdbEngine(
   def rangeAggregateBy(promql: String, grouping: Grouping,
       startMs: Long, endMs: Long): DataFrame =
     PromParser.parse(promql) match {
-      case RangeFn(kind, MatrixSelector(sel, rangeMs), fnArgs) =>
-        require(kind != FnAbsentOverTime,
-          "absent_over_time has no grouped form (absence is not " +
-            "attributable to a label value)")
-        val (gNames, gCols) = groupProjection(grouping)
-        require(gNames.nonEmpty,
+      case rf @ RangeFn(_, _: MatrixSelector, _) =>
+        require(groupProjection(grouping)._1.nonEmpty,
           "by () has no grouped form — use the ungrouped evaluation")
-        val base = data
-          .where(scanCond(sel, startMs, endMs))
-          .select(gCols ++ Seq(shiftedTs(sel),
-            col("value").cast("double").as("value")): _*)
-          .select(gNames.map(col) ++ Seq(
-            (col("timestamp") -
-              pmod(col("timestamp") - startMs, lit(rangeMs))).as("wstart"),
-            col("timestamp"), col("value")): _*)
-        RangeFns.aggWindows(kind, base, fnArgs, gNames :+ "wstart",
-            RangeFns.extrapolateSpec(kind, rateMode, col("wstart"), rangeMs))
-          .select(gNames.map(col) ++
-            Seq(col("wstart").as("timestamp"), col("value")): _*)
+        groupedVector(rf, grouping, startMs, endMs)._1
       case other => throw new IllegalArgumentException(
         s"rangeAggregateBy requires a range function over a matrix " +
           s"selector, got: $other")
     }
-
-  /** [[rangeAggregateBy]] × [[queryRange]]: the grouped form under
-    * query_range's sliding per-step evaluation — every label value's
-    * own dashboard series at every step. Same bounded-replication
-    * explode, with (group, wstart) as the one exchange key; the scan
-    * extends one window behind start like queryRange's.
-    */
-  def queryRangeBy(promql: String, labelKey: String,
-      startMs: Long, endMs: Long, stepMs: Long): DataFrame =
-    queryRangeBy(promql, Grouping(by = true, List(labelKey)),
-      startMs, endMs, stepMs).withColumnRenamed(labelKey, "group")
-
-  /** [[queryRangeBy]] generalized to a full [[Expr.Grouping]] — label
-    * sets and the `without` form under the sliding per-step
-    * evaluation. Emits (group cols..., timestamp, value).
-    */
-  def queryRangeBy(promql: String, grouping: Grouping,
-      startMs: Long, endMs: Long, stepMs: Long): DataFrame =
-    queryRangeBy(PromParser.parse(promql), grouping, startMs, endMs, stepMs)
-
-  /** [[queryRangeBy]] from a pre-parsed AST (the Prometheus API
-    * bridge's grouped arm) — a RECURSIVE grouped twin of
-    * [[slidingEval]]: range functions over matrix selectors (the base
-    * case — one scan, per-(group, step) sliding windows), instant math
-    * and scalar-literal arithmetic/comparison (row-local), BINARY
-    * COMPOSITION (`sum_over_time(err[5m]) / sum_over_time(req[5m])` by
-    * service — both sides step-count × group-count derived frames on
-    * the same grid, joined on (group keys, step) with NULL-SAFE group
-    * equality so the missing-label group matches itself), and SET
-    * OPERATORS (semi/anti/union on the same key). Each selector scans
-    * exactly once — the no-amplification law, grouped.
-    */
-  def queryRangeBy(parsed: Expr, grouping: Grouping,
-      startMs: Long, endMs: Long, stepMs: Long): DataFrame = {
-    val (gNames, gCols) = groupProjection(grouping)
-    require(gNames.nonEmpty,
-      "by () has no grouped form — use queryRange")
-    // null-safe (groups..., timestamp) key condition against a
-    // suffix-renamed right side (the groupedBinary idiom; timestamps
-    // are never null so plain equality there)
-    def keyed(r: DataFrame): (DataFrame, Column) = {
-      val rk = r.toDF(r.columns.map {
-        case "timestamp" => "_rts"
-        case "value" => "_rv"
-        case g => g + "_graft_r"
-      }.toIndexedSeq: _*)
-      (rk, gNames.map(k => col(k) <=> col(k + "_graft_r"))
-        .reduce(_ && _) && col("timestamp") === col("_rts"))
-    }
-    def ge(e: Expr): DataFrame = e match {
-      case RangeFn(kind, MatrixSelector(sel, rangeMs), fnArgs) =>
-        require(kind != FnAbsentOverTime,
-          "absent_over_time has no grouped form (absence is not " +
-            "attributable to a label value)")
-        val rows = data
-          .where(scanCond(sel, startMs - rangeMs + 1, endMs))
-          .select(gCols ++ Seq(shiftedTs(sel), col("value")): _*)
-        RangeFns.sliding(kind, rows, rangeMs, stepMs, startMs, endMs,
-          fnArgs, groupCols = gNames, mode = rateMode)
-      case RangeFn(kind, SubqueryMatrix(inner, subRange, subStep, soff),
-          fnArgs) =>
-        // grouped sliding subquery — the slidingEval arm's per-group
-        // twin: inner evaluated once per group on its subStep grid,
-        // outer fn slides per group over the derived frame. A FINER
-        // `by` inner grouping (round 14 — `max_over_time(sum by (a,b)
-        // (...)[1h:5m])` evaluated by (a)) evaluates per ITS grouping
-        // (first keyed group-by), drops the extra label columns, and
-        // the outer fn's (group, wstart) fold is the second keyed
-        // group-by — each evaluation group pools its sub-series'
-        // samples, the model's pooled-series rule applied to the
-        // derived frame. Still one scan.
-        require(kind != FnAbsentOverTime,
-          "absent_over_time has no grouped form (absence is not " +
-            "attributable to a label value)")
-        val ig = finerInnerGrouping(inner, grouping)
-        val all = queryRangeBy(inner, ig,
-          startMs - subRange - soff, endMs - soff, subStep)
-        val derived = reportOnOuterClock(
-          if (ig eq grouping) all
-          else projectInnerGroups(all, ig, gNames), soff)
-        RangeFns.sliding(kind, derived, subRange, stepMs, startMs, endMs,
-          fnArgs, groupCols = gNames, mode = rateMode)
-      case InstantFn(kind, child, args) =>
-        ge(child).withColumn("value",
-          TsdbEngine.instantColumn(kind, args, col("value").cast("double")))
-      case BinaryOp(kind, lhs, rhs, None)
-          if isSetOp(kind) &&
-            (lhs.isInstanceOf[NumberLit] || rhs.isInstanceOf[NumberLit]) =>
-        throw new IllegalArgumentException(
-          "set operators (and/or/unless) take vector operands, not " +
-            "scalars (the Prometheus rule)")
-      case BinaryOp(kind, NumberLit(v), rhs, None) =>
-        val r = ge(rhs)
-        if (isComparison(kind)) r.where(cmp(kind, lit(v), col("value")))
-        else r.withColumn("value",
-          arith(kind, lit(v), col("value").cast("double")))
-      case BinaryOp(kind, lhs, NumberLit(v), None) =>
-        val l = ge(lhs)
-        if (isComparison(kind)) l.where(cmp(kind, col("value"), lit(v)))
-        else l.withColumn("value",
-          arith(kind, col("value").cast("double"), lit(v)))
-      case BinaryOp(kind, lhs, rhs, None) if isSetOp(kind) =>
-        val l = ge(lhs)
-        kind match {
-          case And =>
-            val (rk, cond) = keyed(ge(rhs)); l.join(rk, cond, "left_semi")
-          case Unless =>
-            val (rk, cond) = keyed(ge(rhs)); l.join(rk, cond, "left_anti")
-          case _ =>
-            val r = ge(rhs)
-            val (lk, cond) = keyed(l)
-            // or: left wins; right fills only uncontested keys. The
-            // anti-join probes the LEFT's keys from the right side;
-            // select the right's columns BY NAME into keyed()'s
-            // left-role layout (a positional rename would silently
-            // mislabel if a future arm emitted a different order)
-            val rRenamed = r.select(
-              (gNames :+ "timestamp" :+ "value").map(col): _*)
-            l.unionByName(rRenamed.join(
-              lk.select((gNames.map(_ + "_graft_r") :+ "_rts").map(col): _*),
-              cond, "left_anti"))
-        }
-      case BinaryOp(kind, lhs, rhs, None) =>
-        require(!isComparison(kind),
-          "comparison between two grouped sliding vectors is not " +
-            "supported (the V2V rule)")
-        val l = ge(lhs)
-        val (rk, cond) = keyed(ge(rhs))
-        l.join(rk, cond).select(gNames.map(col) ++ Seq(col("timestamp"),
-          arith(kind, col("value").cast("double"),
-            col("_rv").cast("double")).as("value")): _*)
-      case Aggregate(kind, child, g) =>
-        // GROUPED AGGREGATE INNER — `sum by (s) (rate(m[5m]))` inside
-        // a subquery or under grouped query_range: legal when the
-        // node's grouping IS the evaluation grouping (label ORDER
-        // never matters — group columns join by name); a groupless
-        // aggregate rides too, because the grouped evaluation already
-        // pools each group's samples, which is exactly what the
-        // aggregate would do per group. A DIFFERENT grouping would
-        // need a second group-by level per step — re-group the outer
-        // evaluation instead.
-        require(g.forall(x => x.by == grouping.by &&
-            x.labels.toSet == grouping.labels.toSet),
-          s"aggregate grouping $g differs from the evaluation " +
-            s"grouping $grouping — sliding evaluation carries ONE " +
-            "group key; under a SUBQUERY a finer `by` superset pools " +
-            "into the evaluation grouping at the outer fold (round " +
-            "14), otherwise re-group the outer evaluation to match")
-        val (inner, post) = slidingAggregate(kind, child, stepMs)
-        post(ge(inner))
-      case other => throw new IllegalArgumentException(
-        "grouped sliding evaluation takes range functions over matrix " +
-          "selectors or subqueries, optionally under instant math, " +
-          s"aggregation, scalar-literal arithmetic/comparison, binary " +
-          s"or set " +
-          s"composition, got: $other — per-step re-evaluation of " +
-          "arbitrary expressions would rescan the store once per step")
-    }
-    ge(parsed)
-  }
-
-  /** MATCHED grouped sliding composition — the share-of-parent panel
-    * OVER TIME: `sum by (a, b) (x) / on (a) group_left sum by (a) (y)`
-    * at every step. Each side evaluates through the grouped sliding
-    * recursion with ITS OWN grouping (`by` or, since round 13,
-    * `without` — the canonical string re-opens into the match-key
-    * values), and the sides join per (match key, step)
-    * under exactly [[groupedBinaryMatched]]'s acceptance rules
-    * (one-to-one needs both sides keyed by the match labels;
-    * many-to-one needs the 'one' side keyed exactly by them [∪ carry],
-    * carry-tuple uniqueness enforced per (key, step) on the
-    * executors). Both frames are group-count × step-count sized; the
-    * 'one' side broadcasts. Output: (many-side groups..., carried
-    * labels..., timestamp, value).
-    */
-  def queryRangeByMatched(lhs: Expr, gl: Grouping, rhs: Expr,
-      gr: Grouping, kind: BinKind, m: VectorMatch,
-      startMs: Long, endMs: Long, stepMs: Long): DataFrame = {
-    // `without` sides (round 13) ride the canonical `labels` column;
-    // matchedGroupedJoin re-opens the match-key values from it
-    def sideCols(g: Grouping): Seq[String] =
-      if (g.by) g.labels else Seq("labels")
-    matchedGroupedJoin(kind,
-      queryRangeBy(lhs, gl, startMs, endMs, stepMs), sideCols(gl),
-      queryRangeBy(rhs, gr, startMs, endMs, stepMs), sideCols(gr),
-      m, timeKey = true)
-  }
-
-  /** topk/bottomk OVER TIME — the dashboard "top k series per step"
-    * panel the API bridge already serves, engine-native (round 13):
-    * the grouped sliding evaluation of `inner` (any shape
-    * [[queryRangeBy]] accepts — range fns, aggregate inners, binary/
-    * set composition), then a per-STEP rank keeping the k best groups
-    * at each step (ties break on the group key ascending, the grouped
-    * whole-range rule). The rank partitions on the step timestamp over
-    * the group-count × step-count derived frame — bounded, never a
-    * global sort; each selector scans once. k follows GetK's k-subplan
-    * contract ([[scalarK]] — a 1-row whole-range collect, the
-    * reference's own k shape). Emits (group cols..., timestamp, value).
-    */
-  def queryRangeGetK(top: Boolean, kExpr: Expr, inner: Expr,
-      grouping: Grouping, startMs: Long, endMs: Long,
-      stepMs: Long): DataFrame = {
-    requireOneInnerGrouping(inner, "ranged topk/bottomk")
-    val k = scalarK(kExpr, startMs, endMs)
-    val df = queryRangeBy(inner, grouping, startMs, endMs, stepMs)
-    if (k <= 0) return df.limit(0)
-    val (gNames, _) = groupProjection(grouping)
-    val rank = row_number().over(
-      org.apache.spark.sql.expressions.Window
-        .partitionBy(col("timestamp"))
-        .orderBy((if (top) col("value").desc else col("value").asc) +:
-          gNames.map(col(_).asc): _*))
-    df.withColumn("_rk", rank).where(col("_rk") <= k).drop("_rk")
-  }
-
-  /** limitk's query_range twin: per-step deterministic series
-    * sampling — the whole-range LimitK arm's md5-order rule applied
-    * PER STEP, so each evaluation samples among the series present at
-    * that step (the Prometheus per-evaluation contract: a group with
-    * no samples in a step's window doesn't occupy one of the k slots
-    * there). The rank window partitions on the step timestamp —
-    * group-count-sized frames over the post-aggregation matrix, never
-    * a global sort (the [[queryRangeGetK]] shape with the sampling
-    * order instead of the value order).
-    */
-  def queryRangeLimitK(kExpr: Expr, inner: Expr, grouping: Grouping,
-      startMs: Long, endMs: Long, stepMs: Long): DataFrame = {
-    requireOneInnerGrouping(inner, "ranged limitk")
-    val k = scalarK(kExpr, startMs, endMs)
-    perStepLimitK(queryRangeBy(inner, grouping, startMs, endMs, stepMs),
-      groupProjection(grouping)._1, k)
-  }
-
-  /** The per-step md5 pick itself, over an explicit series-column
-    * list — shared by the grouped sampler above and the MATCHED twins
-    * below (whose series key is the many side's groups plus any
-    * carried labels, not a single grouping's projection).
-    */
-  private def perStepLimitK(df: DataFrame, seriesCols: Seq[String],
-      k: Int): DataFrame = {
-    if (k <= 0) return df.limit(0)
-    val rank = row_number().over(
-      org.apache.spark.sql.expressions.Window
-        .partitionBy(col("timestamp"))
-        .orderBy(sampleOrderFor(seriesCols): _*))
-    df.withColumn("_rk", rank).where(col("_rk") <= k).drop("_rk")
-  }
-
-  /** limit_ratio's query_range twin — per-step rank AND per-step
-    * count over the same timestamp-partitioned window; r >= 0 keeps
-    * the first round(r*n_step) series in md5 order, r < 0 the exact
-    * complement (rk > round((1+r)*n_step)), so limit_ratio(r) and
-    * limit_ratio(r-1) partition each step exactly — including steps
-    * where n varies because a series has no samples in the window.
-    */
-  def queryRangeLimitRatio(r: Double, inner: Expr, grouping: Grouping,
-      startMs: Long, endMs: Long, stepMs: Long): DataFrame = {
-    requireOneInnerGrouping(inner, "ranged limit_ratio")
-    perStepLimitRatio(queryRangeBy(inner, grouping, startMs, endMs, stepMs),
-      groupProjection(grouping)._1, r)
-  }
-
-  private def perStepLimitRatio(df: DataFrame, seriesCols: Seq[String],
-      r: Double): DataFrame = {
-    require(r >= -1 && r <= 1, s"limit_ratio takes r in [-1, 1], got $r")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("timestamp"))
-    val ranked = df
-      .withColumn("_rk",
-        row_number().over(w.orderBy(sampleOrderFor(seriesCols): _*)))
-      .withColumn("_n", count(lit(1)).over(w))
-    val kept =
-      if (r >= 0) ranked.where(col("_rk") <= round(lit(r) * col("_n")))
-      else ranked.where(col("_rk") > round(lit(1 + r) * col("_n")))
-    kept.drop("_rk", "_n")
-  }
-
-  /** Per-step sampling over a MATCHED grouped composition (round 15):
-    * `limitk(3, sum by (a, b) (x) / on (a) group_left sum by (a)
-    * (y))` — the share-of-parent matrix from [[queryRangeByMatched]]
-    * sampled per step. The series identity (and so the md5 key) is the
-    * many side's group columns plus any carried labels — for a
-    * `without`-grouped many side that is the canonical labels string,
-    * which is itself deterministic text, so the pick stays
-    * oracle-checkable. Same frame bounds as the matched query_range
-    * surface; the rank window adds one timestamp-partitioned pass.
-    */
-  def queryRangeLimitKMatched(kExpr: Expr, lhs: Expr, gl: Grouping,
-      rhs: Expr, gr: Grouping, kind: BinKind, m: VectorMatch,
-      startMs: Long, endMs: Long, stepMs: Long): DataFrame = {
-    val k = scalarK(kExpr, startMs, endMs)
-    perStepLimitK(
-      queryRangeByMatched(lhs, gl, rhs, gr, kind, m, startMs, endMs, stepMs),
-      matchedSeriesCols(gl, gr, m), k)
-  }
-
-  def queryRangeLimitRatioMatched(r: Double, lhs: Expr, gl: Grouping,
-      rhs: Expr, gr: Grouping, kind: BinKind, m: VectorMatch,
-      startMs: Long, endMs: Long, stepMs: Long): DataFrame =
-    perStepLimitRatio(
-      queryRangeByMatched(lhs, gl, rhs, gr, kind, m, startMs, endMs, stepMs),
-      matchedSeriesCols(gl, gr, m), r)
-
-  /** The series columns a matched composition emits: the many side's
-    * groups (canonical `labels` when `without`-grouped) plus carried
-    * labels — the key the bridge serializes and the samplers rank on.
-    */
-  def matchedSeriesCols(gl: Grouping, gr: Grouping,
-      m: VectorMatch): Seq[String] = {
-    val manyG = if (m.card == OneToMany) gr else gl
-    (if (manyG.by) manyG.labels else Seq("labels")) ++ m.carry
-  }
 
   /** GROUPED SUBQUERY — the outer range function folding a grouped
     * sliding inner:
@@ -2083,8 +1920,8 @@ final class TsdbEngine(
         // subquery offset: inner evaluated on the shifted clock,
         // reported on the outer one. A finer `by` inner grouping
         // evaluates per its own key and pools into the evaluation
-        // groups at the tumbling fold (round 14; the ge() subquery
-        // arm's rule)
+        // groups at the tumbling fold (round 14; the sliding
+        // subquery arm's rule)
         val ig = finerInnerGrouping(inner, grouping)
         val all = queryRangeBy(inner, ig,
           startMs - soff, endMs - soff, subStep)
@@ -2381,17 +2218,55 @@ final class TsdbEngine(
 }
 
 object TsdbEngine {
+  /** The grouping a tree evaluates under in sliding evaluation: the
+    * first by/without clause found walking the composition — the
+    * convention that an aggregate-free operand beside a grouped
+    * aggregate evaluates per group. The Prometheus API bridge picks
+    * [[TsdbEngine.queryRange]] or [[TsdbEngine.queryRangeBy]] with it.
+    */
+  private[graft] def innerGrouping(e: Expr): Option[Grouping] =
+    innerGroupings(e).headOption
+
+  /** EVERY grouping a tree carries at its composition level, in walk
+    * order. Descent stops at an aggregate's OWN clause (a finer
+    * grouping nested under it is the legal subquery-pooling case,
+    * validated where it evaluates) and at count_values, whose output
+    * series are keyed by value text, not by its inner's groups. A
+    * matched (on/ignoring) binary carries its many side's grouping —
+    * the key of the series it emits; the per-step samplers carry their
+    * child's.
+    */
+  private[tsdb] def innerGroupings(e: Expr): Seq[Grouping] = e match {
+    case Aggregate(AggCountValues(_), _, None) => Nil
+    case Aggregate(_, c, g) => g.map(Seq(_)).getOrElse(innerGroupings(c))
+    case BinaryOp(_, l, r, Some(m)) =>
+      innerGroupings(if (m.card == OneToMany) r else l)
+    case BinaryOp(_, l, r, None) => innerGroupings(l) ++ innerGroupings(r)
+    case InstantFn(_, c, _) => innerGroupings(c)
+    case RangeFn(_, c, _) => innerGroupings(c)
+    case SubqueryMatrix(c, _, _, _) => innerGroupings(c)
+    case GetK(_, _, c, None) => innerGroupings(c)
+    case LimitK(_, c) => innerGroupings(c)
+    case LimitRatio(_, c) => innerGroupings(c)
+    case _ => Nil
+  }
+
+  /** Grouping equality is order-INsensitive: `by (a, b)` and `by (b,
+    * a)` are one grouping — group columns join by NAME.
+    */
+  private[graft] def sameGrouping(a: Grouping, b: Grouping): Boolean =
+    a.by == b.by && a.labels.toSet == b.labels.toSet
+
   /** The per-step windowed twin of an aggregation operator over a BARE
     * selector in sliding evaluation — `sum(m)` at step T is the window
     * statistic of m's samples in (T - step, T]: sum → sum_over_time,
     * count → count_over_time, group → present_over_time (1 for any
-    * non-empty window), quantile(φ) carries φ. Shared by the engine's
-    * sliding Aggregate arms and the Prometheus API bridge (the mapping
-    * the bridge proved first; lifted here so both surfaces agree by
-    * construction). count_values rejects: value-keyed groups have no
+    * non-empty window), quantile(φ) carries φ — the sliding Aggregate
+    * arm's mapping, which the Prometheus API bridge's `sum by (u) (m)`
+    * reaches through. count_values rejects: value-keyed groups have no
     * per-step window analogue in the pooled-series model.
     */
-  private[graft] def windowedAgg(kind: AggKind): (RangeFnKind, List[Double]) =
+  private def windowedAgg(kind: AggKind): (RangeFnKind, List[Double]) =
     kind match {
       case AggSum => (FnSumOverTime, Nil)
       case AggAvg => (FnAvgOverTime, Nil)
@@ -2415,7 +2290,7 @@ object TsdbEngine {
     * stddev/stdvar are 0: exactly Prometheus' answer when a group
     * holds a single series. Row-local post-map, no extra scan.
     */
-  private[graft] def pooledAggPost(kind: AggKind): DataFrame => DataFrame =
+  private def pooledAggPost(kind: AggKind): DataFrame => DataFrame =
     kind match {
       case AggSum | AggAvg | AggMin | AggMax => identity
       case AggQuantile(phi) =>

@@ -607,7 +607,7 @@ final class GraftDb(
     * instant math, binary/set operators) records one derived stream
     * PER GROUP, all named `targetName`, each carrying its group labels
     * (`sum_over_time(req[5m])` by (service) → `targetName{service=…}`
-    * series). The null group (label absent) records WITHOUT the label,
+    * series) and any label a matched rule's `group_left (c)` carries. The null group (label absent) records WITHOUT the label,
     * exactly Prometheus' missing-label rule.
     *
     * Scale shape: ONE distributed rebalance-keyed append writes every
@@ -645,7 +645,10 @@ final class GraftDb(
     val frame = df.persist()
     try {
       val n = frame.count()
-      appendGroupedFrame(tname, grouping.labels, frame)
+      // the frame's series key: the group labels, plus any label a
+      // matched rule carries (`… / on (a) group_left (c) …`)
+      appendGroupedFrame(tname,
+        frame.columns.toSeq.filterNot(Set("timestamp", "value")), frame)
       n
     } finally frame.unpersist()
   }

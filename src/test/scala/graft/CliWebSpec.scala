@@ -343,6 +343,18 @@ class CliWebSpec extends AnyFunSuite {
         assert(r.statusCode() == 400 && r.body().contains(msg),
           s"step=$step: ${r.body()}")
       }
+      // Prometheus' resolution cap: (end - start) / step may not exceed
+      // 11,000 — 11,001 steps past start rejects before evaluating, and
+      // exactly 11,000 still answers
+      def rangeAt(end: String) = metaGet(
+        s"/api/v1/query_range?path=${enc(db)}&query=" +
+          s"${enc("sum_over_time(req[20ms])")}&start=0&end=$end&step=1ms")
+      val overCap = rangeAt("11.001")
+      assert(overCap.statusCode() == 400 && overCap.body().contains(
+        "exceeded maximum resolution of 11,000 points per timeseries"),
+        overCap.body())
+      val atCap = rangeAt("11")
+      assert(atCap.statusCode() == 200, atCap.body())
       // the Java float-suffix trap: "1d".toDouble is 1.0, so a parse-
       // attempt dispatch would read a one-DAY step as one SECOND
       assert(Web.promStepMs("1d") == 86400000L)
@@ -640,6 +652,82 @@ class CliWebSpec extends AnyFunSuite {
         within.body())
       val withinZero = rangeQ("topk by (service) (0, req)")
       assert(!withinZero.body().contains("values\":[["), withinZero.body())
+    } finally server.stop(0)
+  }
+
+  test("http: composed bridge shapes — goldens per tree family, count_values folds reject") {
+    val db = freshDb()
+    assert(cli(db, "create-stream", """req{service = "web"}""", "f64")._1 == 0)
+    assert(cli(db, "create-stream", """req{service = "mob"}""", "f64")._1 == 0)
+    for ((t, v) <- Seq((10, 1), (20, 2), (30, 4)))
+      assert(cli(db, "insert", """req{service = "web"}""",
+        t.toString, v.toString)._1 == 0)
+    assert(cli(db, "insert", """req{service = "mob"}""", "10", "8")._1 == 0)
+    val server = Web.start(spark, 0)
+    try {
+      val port = server.getAddress.getPort
+      val client = HttpClient.newHttpClient()
+      def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+      def rangeQ(q: String) = client.send(
+        HttpRequest.newBuilder(URI.create(
+          s"http://localhost:$port/api/v1/query_range?path=${enc(db)}" +
+            s"&query=${enc(q)}&start=0.02&end=0.04&step=20ms")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      def golden(q: String, series: String*): Unit = {
+        val r = rangeQ(q)
+        assert(r.statusCode() == 200, s"$q: ${r.body()}")
+        for (s <- series) assert(r.body().contains(s), s"$q: ${r.body()}")
+        assert(r.body().split("\"metric\"").length - 1 == series.size,
+          s"$q: ${r.body()}")
+      }
+      // windows (0,20] / (20,40]: sum_over_time web 3 / 4, mob 8 / -;
+      // count_over_time web 2 / 1, mob 1 / -
+      val inner = "sum by (service) (sum_over_time(req[20ms]))"
+      // one-series stddev over a windowed inner, under literal arithmetic
+      golden("stddev(sum_over_time(req[20ms])) + 1",
+        """{"metric":{},"values":[[0.02,"1.0"],[0.04,"1.0"]]}""")
+      // an aggregate over a composed child: |3-5|, |4-5|; |8-5|
+      golden("sum by (service) (abs(sum_over_time(req[20ms]) - 5))",
+        """{"metric":{"service":"mob"},"values":[[0.02,"3.0"]]}""",
+        """{"metric":{"service":"web"},"values":[[0.02,"2.0"],[0.04,"1.0"]]}""")
+      // topk over a non-aggregate child: negated, web's -3 beats mob's -8
+      golden(s"topk(1, $inner * -1)",
+        """{"metric":{"service":"web"},"values":[[0.02,"-3.0"],[0.04,"-4.0"]]}""")
+      // a matched composition under literal arithmetic: 2 × windowed mean
+      golden(s"($inner / on (service) group_left " +
+          "sum by (service) (count_over_time(req[20ms]))) * 2",
+        """{"metric":{"service":"mob"},"values":[[0.02,"16.0"]]}""",
+        """{"metric":{"service":"web"},"values":[[0.02,"3.0"],[0.04,"8.0"]]}""")
+      // ... under instant math: |mean - 5|
+      golden(s"abs($inner / on (service) group_left " +
+          "sum by (service) (count_over_time(req[20ms])) - 5)",
+        """{"metric":{"service":"mob"},"values":[[0.02,"3.0"]]}""",
+        """{"metric":{"service":"web"},"values":[[0.02,"3.5"],[0.04,"1.0"]]}""")
+      // ... with a non-aggregate many side: |sum - 10| / count
+      golden(s"abs($inner - 10) / on (service) group_left " +
+          "sum by (service) (count_over_time(req[20ms]))",
+        """{"metric":{"service":"mob"},"values":[[0.02,"2.0"]]}""",
+        """{"metric":{"service":"web"},"values":[[0.02,"3.5"],[0.04,"6.0"]]}""")
+      // a root composing two grouped subqueries: the windowed mean
+      golden(s"max_over_time($inner[20ms:20ms]) / max_over_time(" +
+          "sum by (service) (count_over_time(req[20ms]))[20ms:20ms])",
+        """{"metric":{"service":"mob"},"values":[[0.02,"8.0"]]}""",
+        """{"metric":{"service":"web"},"values":[[0.02,"1.5"],[0.04,"4.0"]]}""")
+      // count_values under literal arithmetic: row-local per value series
+      golden(s"""count_values("b", $inner) * 10""",
+        """{"metric":{"b":"3.0"},"values":[[0.02,"10.0"]]}""",
+        """{"metric":{"b":"4.0"},"values":[[0.04,"10.0"]]}""",
+        """{"metric":{"b":"8.0"},"values":[[0.02,"10.0"]]}""")
+      // folding a count_values frame would answer per VALUE series
+      // (count → 1 on each): an aggregate or subquery over it rejects
+      for (q <- Seq(s"""count(count_values("b", $inner))""",
+          """count(count_values("b", req))""",
+          s"""max_over_time(count_values("b", $inner)[20ms:20ms])""")) {
+        val r = rangeQ(q)
+        assert(r.statusCode() == 400 &&
+          r.body().contains("count_values keys its series by VALUE"),
+          s"$q: ${r.body()}")
+      }
     } finally server.stop(0)
   }
 

@@ -182,6 +182,41 @@ class LibrarySpec extends AnyFunSuite {
     assert(!db.streams().exists(d => d.name == "req_w" || d.name == "req_l"))
   }
 
+  test("recordGrouped: matched rules record per group, carried labels included") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graftdb_rgm").toString
+    val db = new GraftDb(spark, dir)
+    db.createStream("""req{svc="a", tier="gold"}""", VType.F64)
+    db.createStream("""req{svc="b", tier="silver"}""", VType.F64)
+    db.importFrame("""req{svc="a", tier="gold"}""",
+      Seq((10L, 1d), (20L, 3d)).toDF("timestamp", "value"))
+    db.importFrame("""req{svc="b", tier="silver"}""",
+      Seq((10L, 4d)).toDF("timestamp", "value"))
+    val bySvc = graft.tsdb.Expr.Grouping(by = true, List("svc"))
+    def series(sel: String) = db.query(sel, 0L, 100L).output
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    // the windowed mean per svc over (0, 20]: a → 4/2, b → 4/1
+    val n = db.recordGrouped("req_mean",
+      "sum by (svc) (sum_over_time(req[20ms])) / on (svc) group_left " +
+        "sum by (svc) (count_over_time(req[20ms]))", bySvc, 20L, 20L, 20L)
+    assert(n == 2L)
+    assert(db.streams().filter(_.name == "req_mean").map(_.labels).toSet ==
+      Set(Map("svc" -> "a"), Map("svc" -> "b")))
+    assert(series("""req_mean{svc="a"}""") == Seq(20L -> 2d))
+    assert(series("""req_mean{svc="b"}""") == Seq(20L -> 4d))
+    // group_left (tier) carries tier onto each series: the recorded
+    // streams keep it beside the group label
+    assert(db.recordGrouped("req_carry",
+      "sum by (svc) (sum_over_time(req[20ms])) / on (svc) group_left " +
+        "(tier) sum by (svc, tier) (count_over_time(req[20ms]))",
+      bySvc, 20L, 20L, 20L) == 2L)
+    assert(db.streams().filter(_.name == "req_carry").map(_.labels).toSet ==
+      Set(Map("svc" -> "a", "tier" -> "gold"),
+        Map("svc" -> "b", "tier" -> "silver")))
+    assert(series("""req_carry{svc="a", tier="gold"}""") == Seq(20L -> 2d))
+    assert(series("""req_carry{svc="b", tier="silver"}""") == Seq(20L -> 4d))
+  }
+
   test("appendGroupedFrame: 1k new groups = one catalog append, not G re-parses") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graftdb_batch").toString

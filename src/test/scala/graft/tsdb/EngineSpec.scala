@@ -732,13 +732,10 @@ class EngineSpec extends AnyFunSuite {
     // MATCHED sliding composition: share-of-dc per (service, step),
     // `/ on (dc) group_left` — the one side keyed exactly by dc; the
     // null dc group (cli) matches itself through the null-safe key
-    val matched = e.queryRangeByMatched(
-      PromParser.parse("sum_over_time(req[20ms])"),
-      Expr.Grouping(by = true, List("dc", "service")),
-      PromParser.parse("sum_over_time(req[20ms])"),
-      Expr.Grouping(by = true, List("dc")),
-      Expr.Div, Expr.VectorMatch(on = true, List("dc"), Expr.ManyToOne),
-      20, 40, 20)
+    val matched = e.queryRangeBy(
+      "sum by (dc, service) (sum_over_time(req[20ms])) / on (dc) " +
+        "group_left sum by (dc) (sum_over_time(req[20ms]))",
+      Expr.Grouping(by = true, List("dc", "service")), 20, 40, 20)
     assert(matched.columns.toSeq == Seq("dc", "service", "timestamp", "value"))
     val mrows = matched.collect().toSet[Row].map(r =>
       (Option(r.getString(0)), r.getString(1), r.getLong(2), r.getDouble(3)))
@@ -750,13 +747,10 @@ class EngineSpec extends AnyFunSuite {
     // many side without(service) leaves {dc} groups — dividing by the
     // by(dc) one side is the identity ratio at every step, and the
     // output keeps the canonical `labels` group identity
-    val mw = e.queryRangeByMatched(
-      PromParser.parse("sum_over_time(req[20ms])"),
-      Expr.Grouping(by = false, List("service")),
-      PromParser.parse("sum_over_time(req[20ms])"),
-      Expr.Grouping(by = true, List("dc")),
-      Expr.Div, Expr.VectorMatch(on = true, List("dc"), Expr.ManyToOne),
-      20, 40, 20)
+    val mw = e.queryRangeBy(
+      "sum without (service) (sum_over_time(req[20ms])) / on (dc) " +
+        "group_left sum by (dc) (sum_over_time(req[20ms]))",
+      Expr.Grouping(by = false, List("service")), 20, 40, 20)
     assert(mw.columns.toSeq == Seq("labels", "timestamp", "value"))
     val mwRows = mw.collect().toSet[Row].map(r =>
       (r.getString(0), r.getLong(1), r.getDouble(2)))
@@ -772,14 +766,10 @@ class EngineSpec extends AnyFunSuite {
       new TsdbEngine(spark, longDf(rows),
         new StreamCatalog(Seq(StreamDef("req", Map.empty, VType.F64))))
     }
-    val carried = e3.queryRangeByMatched(
-      PromParser.parse("sum_over_time(req[20ms])"),
-      Expr.Grouping(by = true, List("dc", "svc")),
-      PromParser.parse("sum_over_time(req[20ms])"),
-      Expr.Grouping(by = true, List("dc", "tier")),
-      Expr.Div,
-      Expr.VectorMatch(on = true, List("dc"), Expr.ManyToOne, List("tier")),
-      20, 20, 20)
+    val carried = e3.queryRangeBy(
+      "sum by (dc, svc) (sum_over_time(req[20ms])) / on (dc) " +
+        "group_left (tier) sum by (dc, tier) (sum_over_time(req[20ms]))",
+      Expr.Grouping(by = true, List("dc", "svc")), 20, 20, 20)
     assert(carried.columns.toSeq ==
       Seq("dc", "svc", "tier", "timestamp", "value"))
     val crows = carried.collect().toSet[Row].map(r =>
@@ -797,14 +787,10 @@ class EngineSpec extends AnyFunSuite {
       new TsdbEngine(spark, longDf(rows),
         new StreamCatalog(Seq(StreamDef("req", Map.empty, VType.F64))))
     }
-    val dup = intercept[Exception](e4.queryRangeByMatched(
-      PromParser.parse("sum_over_time(req[20ms])"),
-      Expr.Grouping(by = true, List("dc", "svc")),
-      PromParser.parse("sum_over_time(req[20ms])"),
-      Expr.Grouping(by = true, List("dc", "tier")),
-      Expr.Div,
-      Expr.VectorMatch(on = true, List("dc"), Expr.ManyToOne, List("tier")),
-      20, 20, 20).collect())
+    val dup = intercept[Exception](e4.queryRangeBy(
+      "sum by (dc, svc) (sum_over_time(req[20ms])) / on (dc) " +
+        "group_left (tier) sum by (dc, tier) (sum_over_time(req[20ms]))",
+      Expr.Grouping(by = true, List("dc", "svc")), 20, 20, 20).collect())
     assert(dup.getMessage.contains("not unique"), dup.getMessage)
     // set operators take vector operands, not scalars — in the grouped
     // AND ungrouped sliding evaluators (the NumberLit arithmetic arms
@@ -815,6 +801,84 @@ class EngineSpec extends AnyFunSuite {
     val se2 = intercept[IllegalArgumentException](e.queryRange(
       "count_over_time(req[20ms]) and 2", 20, 40, 20))
     assert(se2.getMessage.contains("not scalars"), se2.getMessage)
+  }
+
+  test("sliding composition: aggregates, samplers, matched trees and subqueries under math; series-key check") {
+    val e = groupedEngine()
+    val byDc = Expr.Grouping(by = true, List("dc"))
+    def pooled(q: String): Set[(Long, Double)] =
+      e.queryRange(q, 20, 40, 20).output.collect().toSet[Row]
+        .map(r => (r.getLong(0), r.getDouble(1)))
+    def rows(df: DataFrame): Set[(Option[String], Long, Double)] =
+      df.collect().toSet[Row].map(r =>
+        (Option(r.getString(0)), r.getLong(1), r.getDouble(2)))
+    // windows (T-20, T] at T = 20, 40: per dc, sum_over_time is a → 11,
+    // b → 20 at step 20 and the null group → 32 at step 40;
+    // count_over_time is a → 3, b → 2, null → 1
+    // one-series count over a windowed inner, under literal arithmetic
+    assert(pooled("count(sum_over_time(req[20ms])) * 2") ==
+      Set(20L -> 2d, 40L -> 2d))
+    // an aggregate over a composed child: the per-group identity
+    assert(rows(e.queryRangeBy(
+      "sum by (dc) (abs(sum_over_time(req[20ms]) - 15))",
+      byDc, 20, 40, 20)) ==
+      Set((Some("a"), 20L, 4d), (Some("b"), 20L, 5d), (None, 40L, 17d)))
+    // topk over a non-aggregate grouped child: negated, a's -11 beats
+    // b's -20 at step 20; the null group is alone at step 40
+    assert(rows(e.queryRangeBy(
+      "topk(1, sum by (dc) (sum_over_time(req[20ms])) * -1)",
+      byDc, 20, 40, 20)) == Set((Some("a"), 20L, -11d), (None, 40L, -32d)))
+    // a matched composition under literal arithmetic
+    val share = e.queryRangeBy(
+      "(sum by (dc, service) (sum_over_time(req[20ms])) / on (dc) " +
+        "group_left sum by (dc) (sum_over_time(req[20ms]))) * 11",
+      Expr.Grouping(by = true, List("dc", "service")), 20, 40, 20)
+    assert(share.collect().toSet[Row].map(r => (Option(r.getString(0)),
+        r.getString(1), r.getLong(2), r.getDouble(3))) == Set(
+      (Some("a"), "web", 20L, 3d / 11 * 11),
+      (Some("a"), "mob", 20L, 8d / 11 * 11),
+      (Some("b"), "web", 20L, 4d / 20 * 11),
+      (Some("b"), "mob", 20L, 16d / 20 * 11),
+      (None, "cli", 40L, 11d)))
+    // a root composing two grouped subqueries: the windowed mean again
+    assert(rows(e.queryRangeBy(
+      "max_over_time(sum by (dc) (sum_over_time(req[20ms]))[20ms:20ms]) / " +
+        "max_over_time(sum by (dc) (count_over_time(req[20ms]))[20ms:20ms])",
+      byDc, 20, 40, 20)) ==
+      Set((Some("a"), 20L, 11d / 3), (Some("b"), 20L, 10d), (None, 40L, 32d)))
+    // count_values under literal arithmetic: row-local per value series
+    val cv = e.queryRange(
+      """count_values("v", sum by (dc) (sum_over_time(req[20ms]))) * 10""",
+      20, 40, 20).output
+    assert(cv.columns.toSeq == Seq("v", "timestamp", "value"))
+    assert(cv.collect().toSet[Row].map(r =>
+      (r.getString(0), r.getLong(1), r.getDouble(2))) == Set(
+      ("11.0", 20L, 10d), ("20.0", 20L, 10d), ("32.0", 40L, 10d)))
+    // a frame keyed by more than the evaluation's series key is neither
+    // folded nor slid: count(count_values(...)) would count 1 per value
+    // series, a count_values subquery would pool every value series
+    for (q <- Seq("""count(count_values("v", req))""",
+        """sum(count_values("v", sum by (dc) (sum_over_time(req[20ms]))))""",
+        """max_over_time(count_values("v", sum_over_time(req[20ms]))[20ms:20ms])""")) {
+      val x = intercept[IllegalArgumentException](
+        e.queryRange(q, 20, 40, 20).output.collect())
+      assert(x.getMessage.contains("count_values keys its series by VALUE"),
+        s"$q: ${x.getMessage}")
+    }
+    // ... nor is a matched frame carrying labels (one series per
+    // (dc, svc, tier), keyed by (dc, svc))
+    val e3 = new TsdbEngine(spark, longDf(Seq(
+        ("req", Map("svc" -> "web", "dc" -> "a", "tier" -> "gold"), 10L, 1d),
+        ("req", Map("svc" -> "mob", "dc" -> "a", "tier" -> "gold"), 20L, 2d))),
+      new StreamCatalog(Seq(StreamDef("req", Map.empty, VType.F64))))
+    val carry = "sum by (dc, svc) (sum_over_time(req[20ms])) / on (dc) " +
+      "group_left (tier) sum by (dc, tier) (sum_over_time(req[20ms]))"
+    for (q <- Seq(s"sum by (dc, svc) ($carry)",
+        s"max_over_time(($carry)[20ms:20ms])")) {
+      val x = intercept[IllegalArgumentException](e3.queryRangeBy(q,
+        Expr.Grouping(by = true, List("dc", "svc")), 20, 20, 20).collect())
+      assert(x.getMessage.contains("carried labels"), s"$q: ${x.getMessage}")
+    }
   }
 
   test("grouping rejections: double clause, composition, bad children") {
@@ -1379,9 +1443,9 @@ class EngineSpec extends AnyFunSuite {
 
   test("queryRangeGetK: per-step rank, ties to the group key, k clamps") {
     val e = groupedEngine()
-    def run(top: Boolean, k: Double) = e.queryRangeGetK(top,
-      Expr.NumberLit(k),
-      PromParser.parse("sum_over_time(req[20ms])"),
+    def run(top: Boolean, k: Double) = e.queryRangeBy(
+      Expr.GetK(top, Expr.NumberLit(k),
+        PromParser.parse("sum_over_time(req[20ms])"), None),
       Expr.Grouping(by = true, List("service")), 20, 40, 20)
       .collect().toSet[Row]
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
@@ -1407,7 +1471,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("aggregate inners in sliding evaluation: windowed twin, pooled transforms") {
-    // round 13: Aggregate nodes admitted into slidingEval/queryRangeBy.
+    // round 13: Aggregate nodes admitted into queryRange/queryRangeBy.
     // ints on ts {10,20,30,40} values {2,4,6,8}; step 20ms windows
     // (T-20, T] at T ∈ {20, 40} → sum(ints) = {2+4, 6+8} = {6, 14}.
     val e = helperEngine()

@@ -195,13 +195,15 @@ class RangeFnSpec extends AnyFunSuite {
       e.rangeAggregateBy("sum(m)", "u", 0L, 100L)
     }
     // grouped × sliding: per-group lookback windows at each step
-    val slid = e.queryRangeBy("sum_over_time(m[30ms])", "u", 0L, 30L, 10L)
+    val slid = e.queryRangeBy("sum_over_time(m[30ms])",
+        Expr.Grouping(by = true, List("u")), 0L, 30L, 10L)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(slid.toSet === Set(
       ("a", 10L, 10.0), ("a", 20L, 30.0), ("a", 30L, 30.0),
       ("b", 10L, 100.0), ("b", 20L, 100.0), ("b", 30L, 100.0)))
     intercept[IllegalArgumentException] {
-      e.queryRangeBy("absent_over_time(m[30ms])", "u", 0L, 30L, 10L)
+      e.queryRangeBy("absent_over_time(m[30ms])",
+        Expr.Grouping(by = true, List("u")), 0L, 30L, 10L)
     }
   }
 
@@ -295,10 +297,24 @@ class RangeFnSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getDouble(1)))
     assert(agg.toSet === Set(("a", 20.0)))
     val slid = e.queryRangeBy("sum_over_time(m[30ms] @ 0 offset 10ms)",
-      "u", 0L, 30L, 10L).collect()
+      Expr.Grouping(by = true, List("u")), 0L, 30L, 10L).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(slid.toSet === Set(
       ("a", 20L, 20.0), ("a", 30L, 20.0))) // only t=15 survives
+  }
+
+  test("aggregateBy is the string surface's `kind by (label)` for every kind") {
+    // two labeled series sharing the name: a=(5,10)(15,20), b=(5,100)
+    val rows = Seq(
+      ("m", Map("u" -> "a"), 5L, 10d), ("m", Map("u" -> "a"), 15L, 20d),
+      ("m", Map("u" -> "b"), 5L, 100d))
+    val e = new TsdbEngine(spark, longDf(rows),
+      new StreamCatalog(Seq(StreamDef("m", Map.empty, VType.F64))))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getDouble(1))).toSet
+    val sd = pairs(e.aggregateBy("m", Expr.AggStddev, "u", 0L, 100L))
+    assert(sd === pairs(e.query("stddev by (u) (m)", 0L, 100L).output))
+    assert(sd === Set(("a", 5.0), ("b", 0.0)))
   }
 
   test("subquery: outer range fn over the inner sliding series") {
