@@ -136,7 +136,7 @@ object Dedup {
       banded: DataFrame, base: DataFrame, threshold: Double = 0.6): DataFrame = {
     // a caller-persisted banded table must be MATERIALIZED before the
     // self-join — a lazy persist gets computed inside both sides' scan
-    // stages on first use (the dd03 double-compute class, Dd03AB);
+    // stages on first use (the dd03 double-compute class, SCALE_CHECK.md);
     // an unpersisted one is left alone (a count would add a full pass
     // without caching anything)
     if (banded.storageLevel != StorageLevel.NONE) banded.count()
@@ -291,7 +291,7 @@ object Dedup {
     // C(m,cw)-row explode AND shuffled it once PER SIDE — measured at
     // 30x (157,500 docs, comboWidth 3, 13.2M band rows): 15.8s
     // end-to-end vs 3.3s for the identical join over the materialized
-    // table (graft.tools.Dd03AB; pair sets identical). A
+    // table (the Dd03AB A/B in SCALE_CHECK.md; pair sets identical). A
     // groupBy+collect_list bucket enumeration measured the same 3.0s
     // but buffers a whole same-key bucket in one array — an
     // identical-fingerprint crawl cluster would OOM an executor where
@@ -317,8 +317,7 @@ object Dedup {
 
   /** The banded combo-key table of a fingerprint frame (id, fp) —
     * C(maxHamming + comboWidth, comboWidth) rows per doc, each carrying
-    * a packed combo key. Split out so the phase probe
-    * (graft.tools.Dd03Probe) can measure the explode volume alone.
+    * a packed combo key.
     * Any comboWidth segment widths sum to <= 60 bits, so a packed
     * combo key always fits one long.
     */
@@ -395,7 +394,7 @@ object Dedup {
     // job computes the table inside BOTH sides' scan stages and only
     // the block-manager race dedupes the work (the UNpersisted variant
     // of this pattern measured a full 2x in the dd03 banded join —
-    // Dd03AB). A/B at 30x showed parity for this already-persisted
+    // SCALE_CHECK.md). A/B at 30x showed parity for this already-persisted
     // table, so the count is insurance that the single pass is
     // guaranteed by construction, not by cache-population timing.
     prefH.count()
@@ -414,23 +413,6 @@ object Dedup {
       .where(col("jac") >= threshold)
       .distinct()
   }
-
-  /** Exact-Jaccard verification of a (id_a, id_b) candidate table
-    * against the shingle table: brings each side's hs array onto the
-    * pair row and keeps pairs at/above the threshold. Split out so the
-    * phase probe (graft.tools.Dd04Probe) can time it against a
-    * materialized candidate table.
-    */
-  private[graft] def jaccardVerify(
-      cand: DataFrame, sh: DataFrame, threshold: Double): DataFrame =
-    cand
-      .join(sh.select(col("id").as("id_a"), col("hs").as("shs_a"))
-        .hint("shuffle_hash"), "id_a" :: Nil)
-      .join(sh.select(col("id").as("id_b"), col("hs").as("shs_b"))
-        .hint("shuffle_hash"), "id_b" :: Nil)
-      .select(col("id_a"), col("id_b"),
-        jaccardSorted(col("shs_a"), col("shs_b")).as("jac"))
-      .where(col("jac") >= threshold)
 
   /** The complete PPJoin candidate set for `jaccardPairsFromShingles`:
     * prefix filter + POSITION filter + size-ratio filter, all row-local
@@ -687,7 +669,7 @@ object Dedup {
       .select("fp")
     // persist + materialize the kept-fingerprint rows before the
     // self-join: unpersisted, the df-cap semi-join (one shuffle agg
-    // over fp) would run once per join side (the dd03 class, Dd03AB)
+    // over fp) would run once per join side (the dd03 class, SCALE_CHECK.md)
     val f = graft.engine.Caches.track(
       fp.join(kept, Seq("fp"), "left_semi")
         .persist(StorageLevel.MEMORY_AND_DISK))
@@ -755,7 +737,7 @@ object Dedup {
     // Both join sides read `df`; an unpersisted input (e.g. an IVF
     // transform — k distance computations per row) would run once per
     // side, and even a lazily-persisted one races its cache population
-    // (the dd03 double-compute class, Dd03AB). Persist if the caller
+    // (the dd03 double-compute class, SCALE_CHECK.md). Persist if the caller
     // didn't, and materialize either way.
     val src =
       if (df.storageLevel == StorageLevel.NONE)

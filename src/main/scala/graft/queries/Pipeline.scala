@@ -131,8 +131,9 @@ object Pipeline {
   // Every shared cache is MATERIALIZED at creation (mat): several
   // gates consume row-filtered views of these frames on both sides of
   // a join, where a lazy persist gets computed once per side on first
-  // use (the dd03 double-compute class, Dd03AB) — and a filtered view's
-  // storageLevel is NONE, so downstream guards cannot see the persist.
+  // use (the dd03 double-compute class, SCALE_CHECK.md) — and a
+  // filtered view's storageLevel is NONE, so downstream guards cannot
+  // see the persist.
   private def mat(df: DataFrame): DataFrame = { df.count(); df }
 
   private def nearShingles(s: SparkSession, dir: String): DataFrame =

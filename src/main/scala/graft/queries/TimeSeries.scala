@@ -607,7 +607,10 @@ object TimeSeries {
     // user's samples; (group, wstart) is the one exchange key.
     "ts54_range_by" -> { (s, dir) =>
       engine(s, dir)
-        .rangeAggregateBy("rate(purchase[1d])", "user", SubStart, SubEnd)
+        .queryBy("rate(purchase[1d])",
+          graft.tsdb.Expr.Grouping(by = true, List("user")),
+          SubStart, SubEnd)
+        .withColumnRenamed("user", "group")
         .withColumn("value", round(col("value"), 6))
         .orderBy("group", "timestamp")
     },
@@ -627,8 +630,8 @@ object TimeSeries {
 
     // grouped aggregate through the STRING surface — `sum by (user)
     // (purchase)`, the clause the reference parses then DROPS
-    // (planner.rs:84-88). ts21 pins the same semantics through the API
-    // method; this pins query() end-to-end: parser → Grouping →
+    // (planner.rs:84-88). ts21 pins the same semantics over click;
+    // this pins query() end-to-end: parser → Grouping →
     // groupedAggregate, result columns named by the grouping labels.
     "ts60_agg_by_promql" -> { (s, dir) =>
       engine(s, dir).query("sum by (user) (purchase)", SubStart, SubEnd)
@@ -753,11 +756,11 @@ object TimeSeries {
     // 1d-rate evaluates slidingly every 12h per user (one raw scan,
     // (user, step) derived frame), and the outer max_over_time tumbles
     // 3-day windows per user over it — "each user's worst 12h-sampled
-    // daily rate per 3-day window". subqueryRangeBy composes the
-    // queryRangeBy grouping with query()'s subquery evaluation.
+    // daily rate per 3-day window". queryBy is query()'s subquery
+    // evaluation under the queryRangeBy grouping.
     "ts70_subquery_by" -> { (s, dir) =>
       engine(s, dir)
-        .subqueryRangeBy("max_over_time(rate(purchase[1d])[3d:12h])",
+        .queryBy("max_over_time(rate(purchase[1d])[3d:12h])",
           graft.tsdb.Expr.Grouping(by = true, List("user")),
           SubStart, SubEnd)
         .select(col("user"), col("timestamp"),
@@ -1487,8 +1490,9 @@ object TimeSeries {
     // Grouped aggregate extension: sum of clicks by user label.
     "ts21_agg_by" -> { (s, dir) =>
       engine(s, dir)
-        .aggregateBy("click", graft.tsdb.Expr.AggSum, "user", SubStart, SubEnd)
-        .select(col("group"), round(col("value"), 6).as("value"))
+        .query("sum by (user) (click)", SubStart, SubEnd)
+        .output
+        .select(col("user").as("group"), round(col("value"), 6).as("value"))
         .orderBy(col("group").cast("long"))
     },
 

@@ -107,13 +107,31 @@ final class TsdbEngine(
     * (planner.rs:196-205).
     */
   def query(promql: String, startMs: Long, endMs: Long): TsdbResult =
-    eval(PromParser.parse(promql), startMs, endMs)
+    eval(PromParser.parse(promql), None, startMs, endMs)
 
   /** [[query]] from a pre-parsed AST (the API bridge parses once and
     * dispatches on the tree it evaluates).
     */
   def query(e: Expr, startMs: Long, endMs: Long): TsdbResult =
-    eval(e, startMs, endMs)
+    eval(e, None, startMs, endMs)
+
+  /** [[query]] under a `by`/`without` grouping — the tumbling twin of
+    * [[queryRangeBy]]: every group's own series over the whole range,
+    * each group's windows seeing only that group's samples (label sets
+    * — one column per label — and the `without` form's canonical
+    * `labels` column). Emits (group cols..., timestamp, value): the
+    * sample time for a selector, the window start for a range
+    * function. The accepted shapes are [[eval]]'s grouped leaves; the
+    * scale shape is the ungrouped one with (group, wstart) as the one
+    * exchange key — group count multiplies output rows, not passes
+    * over the scan.
+    */
+  def queryBy(promql: String, grouping: Grouping,
+      startMs: Long, endMs: Long): DataFrame = {
+    require(groupProjection(grouping)._1.nonEmpty,
+      "by () has no grouped form — use query")
+    eval(PromParser.parse(promql), Some(grouping), startMs, endMs).df
+  }
 
   /** Prometheus query_range evaluation: a range function evaluated at
     * eval times startMs + i*stepMs (i = 0 .. (endMs-startMs)/stepMs),
@@ -216,29 +234,10 @@ final class TsdbEngine(
       (rk, (gNames.map(k => col(k) <=> col(k + "_graft_r")) :+
         (col("timestamp") === col("_rts"))).reduce(_ && _))
     }
-    // the series key of a sliding frame: every column but the step
-    // timestamp and the value (the group columns, or a matched
-    // composition's many-side groups plus carried labels)
-    def seriesCols(df: DataFrame): Seq[String] =
-      df.columns.toSeq.filterNot(Set("timestamp", "value"))
-    // a frame that is folded or joined per (group, step) must be keyed
-    // by exactly the evaluation's series key — a count_values frame
-    // (keyed by its value label) or a matched frame carrying labels
-    // holds SEVERAL series per key, which a pooled fold or a one-to-one
-    // join would silently merge
-    def evalKeyed(df: DataFrame, what: String): DataFrame = {
-      require(seriesCols(df).toSet == gNames.toSet,
-        s"$what must be keyed by the evaluation grouping " +
-          s"(${gNames.mkString(", ")}), got (${seriesCols(df).mkString(", ")})" +
-          " — count_values keys its series by VALUE text and a matched " +
-          "composition adds its carried labels; neither folds or joins " +
-          "per evaluation series")
-      df
-    }
     // both operands of a vector·vector composition
     def operands(lhs: Expr, rhs: Expr): (DataFrame, DataFrame) =
-      (evalKeyed(rec(lhs), "vector operands"),
-        evalKeyed(rec(rhs), "vector operands"))
+      (evalKeyed(rec(lhs), gNames, "vector operands"),
+        evalKeyed(rec(rhs), gNames, "vector operands"))
     // the k first rows of every step in `order` — a rank partitioned on
     // the step timestamp over the series-count × step-count frame:
     // bounded, never a global sort
@@ -267,43 +266,19 @@ final class TsdbEngine(
         // is not attributable to a label value)
         val rows =
           if (grouping.isEmpty) select(sel, startMs - rangeMs + 1, endMs)
-          else data
-            .where(scanCond(sel, startMs - rangeMs + 1, endMs))
-            .select(gCols ++ Seq(shiftedTs(sel), col("value")): _*)
+          else groupedScan(sel, gCols, startMs - rangeMs + 1, endMs)
         RangeFns.sliding(kind, rows, rangeMs, stepMs, startMs, endMs,
           fnArgs, groupCols = gNames, mode = rateMode)
       case RangeFn(kind, SubqueryMatrix(inner, subRange, subStep, soff),
           fnArgs) =>
         // sliding SUBQUERY — query_range of `fn(expr[range:step])`: the
-        // inner derived series must cover every outer window
-        // (T - subRange, T] for T ∈ [start, end], so it evaluates ONCE
-        // over [start - subRange, end] on its own subStep grid (grids
-        // anchor at their evaluation start, the engine convention the
-        // whole-range subquery documents; Prometheus anchors subquery
-        // grids to absolute time — same documented deviation), and the
-        // outer fn slides over the step-count-sized derived frame. No
-        // scan amplification: the inner's selectors each scan once.
-        // `offset` shifts the inner clock and reports on the outer one.
-        // Grouped, a FINER `by` inner grouping (round 14 —
-        // `max_over_time(sum by (a,b) (...)[1h:5m])` evaluated by (a))
-        // evaluates per ITS grouping (first keyed group-by), drops the
-        // extra label columns, and the outer fn's (group, wstart) fold
-        // is the second keyed group-by — each evaluation group pools
-        // its sub-series' samples, the pooled-series rule applied to
-        // the derived frame. Any other extra key column (a count_values
-        // or label-carrying inner) rejects: the fold would pool series
-        // the evaluation never grouped.
-        val innerStart = startMs - subRange - soff
-        val derived = grouping match {
-          case None => sliding(inner, None, innerStart, endMs - soff, subStep)
-          case Some(g) =>
-            val ig = finerInnerGrouping(inner, g)
-            val all = sliding(inner, Some(ig), innerStart, endMs - soff,
-              subStep)
-            if (ig eq g) all else projectInnerGroups(all, ig, gNames)
-        }
+        // inner derived series ([[subqueryInner]]) must cover every
+        // outer window (T - subRange, T] for T ∈ [start, end], so it
+        // evaluates over [start - subRange, end], and the outer fn
+        // slides over the step-count-sized derived frame.
         RangeFns.sliding(kind,
-          reportOnOuterClock(evalKeyed(derived, "a subquery inner"), soff),
+          subqueryInner(inner, grouping, startMs - subRange, endMs,
+            subStep, soff),
           subRange, stepMs, startMs, endMs, fnArgs, groupCols = gNames,
           mode = rateMode)
       case InstantFn(kind, child, fnArgs) =>
@@ -317,15 +292,9 @@ final class TsdbEngine(
           "set operators (and/or/unless) take vector operands, not " +
             "scalars (the Prometheus rule)")
       case BinaryOp(kind, NumberLit(v), rhs, None) =>
-        val r = rec(rhs)
-        if (isComparison(kind)) r.where(cmp(kind, lit(v), col("value")))
-        else r.withColumn("value",
-          arith(kind, lit(v), col("value").cast("double")))
+        literalOp(kind, v, litLeft = true, rec(rhs))
       case BinaryOp(kind, lhs, NumberLit(v), None) =>
-        val l = rec(lhs)
-        if (isComparison(kind)) l.where(cmp(kind, col("value"), lit(v)))
-        else l.withColumn("value",
-          arith(kind, col("value").cast("double"), lit(v)))
+        literalOp(kind, v, litLeft = false, rec(lhs))
       case BinaryOp(kind, lhs, rhs, None) if isSetOp(kind) =>
         // `and` keeps left rows whose key exists on the right (semi
         // join), `unless` the complement (anti join), `or` prefers left
@@ -438,7 +407,7 @@ final class TsdbEngine(
             s"grouped aggregate (${if (x.by) "by" else "without"} " +
               s"${x.labels.mkString("(", ", ", ")")}) inside an UNGROUPED " +
               "sliding evaluation — its group columns must appear in the " +
-              "output; evaluate through queryRangeBy/subqueryRangeBy with " +
+              "output; evaluate through queryRangeBy with " +
               "the same grouping") }
           case Some(eg) =>
             require(g.forall(TsdbEngine.sameGrouping(_, eg)),
@@ -453,7 +422,7 @@ final class TsdbEngine(
             val (k, args) = TsdbEngine.windowedAgg(kind)
             rec(RangeFn(k, MatrixSelector(sel, stepMs), args))
           case other => TsdbEngine.pooledAggPost(kind)(
-            evalKeyed(rec(other), "an aggregate's child"))
+            evalKeyed(rec(other), gNames, "an aggregate's child"))
         }
       case GetK(top, kExpr, child, None) if grouping.nonEmpty =>
         // topk/bottomk OVER TIME — the "top k series per step" panel:
@@ -566,7 +535,7 @@ final class TsdbEngine(
   }
 
   private def scalarKEval(kExpr: Expr, startMs: Long, endMs: Long): Int = {
-    val kRes = eval(kExpr, startMs, endMs)
+    val kRes = eval(kExpr, None, startMs, endMs)
     require(kRes.isScalar && !kRes.grouped,
       "topk/bottomk k-parameter must be a single scalar")
     val kRows = kRes.df.limit(1).collect()
@@ -671,344 +640,462 @@ final class TsdbEngine(
         require(reserved.isEmpty,
           s"evaluation label(s) ${reserved.mkString(", ")} collide with " +
             "result columns and cannot re-open from a canonical group")
-        gNames.foldLeft(df)((d, k) => d.withColumn(k,
-          unescapeLabelCol(element_at(
-            str_to_map(col("labels"), lit(","), lit("=")),
-            lit(LabelCodec.escape(k))))))
+        gNames.foldLeft(df)((d, k) => d.withColumn(k, canonLabel(k)))
       }
     cols.select(gNames.map(col) ++
       Seq(col("timestamp"), col("value")): _*)
   }
 
-  /** Subquery-offset report-back: the inner evaluated on the shifted
-    * clock reports on the outer one (shared by the tumbling and
-    * sliding, grouped and ungrouped subquery arms).
+  /** A subquery's INNER `expr[range:step] offset soff` as the derived
+    * frame its outer range function windows — shared by the tumbling
+    * ([[eval]]) and sliding subquery arms, pooled and grouped. The
+    * inner evaluates ONCE through [[sliding]] over [lo, hi] on its own
+    * `step` grid (grids anchor at their evaluation start, the engine
+    * convention; Prometheus anchors subquery grids to absolute time —
+    * a documented deviation), so its selectors each scan once and the
+    * frame is step-count × group-count sized. `offset` shifts the
+    * inner clock back and reports on the outer one.
+    *
+    * Grouped, a FINER `by` inner grouping (round 14 —
+    * `max_over_time(sum by (a,b) (...)[1h:5m])` evaluated by (a))
+    * evaluates per ITS grouping (first keyed group-by), drops the extra
+    * label columns, and the outer fn's (group, wstart) fold is the
+    * second keyed group-by — each evaluation group pools its
+    * sub-series' samples, the pooled-series rule applied to the derived
+    * frame. Any other extra key column (a count_values or
+    * label-carrying inner) rejects: the fold would pool series the
+    * evaluation never grouped.
     */
-  private def reportOnOuterClock(df: DataFrame, soff: Long): DataFrame =
-    if (soff == 0L) df
-    else df.withColumn("timestamp", col("timestamp") + lit(soff))
+  private def subqueryInner(inner: Expr, grouping: Option[Grouping],
+      lo: Long, hi: Long, step: Long, soff: Long): DataFrame = {
+    val gNames = grouping.map(groupProjection(_)._1).getOrElse(Nil)
+    val derived = grouping match {
+      case None => sliding(inner, None, lo - soff, hi - soff, step)
+      case Some(g) =>
+        val ig = finerInnerGrouping(inner, g)
+        val all = sliding(inner, Some(ig), lo - soff, hi - soff, step)
+        if (ig eq g) all else projectInnerGroups(all, ig, gNames)
+    }
+    val keyed = evalKeyed(derived, gNames, "a subquery inner")
+    if (soff == 0L) keyed
+    else keyed.withColumn("timestamp", col("timestamp") + lit(soff))
+  }
+
+  /** The series key of a frame keyed per (series, step or window):
+    * every column but the timestamp and the value (the group columns,
+    * or a matched composition's many-side groups plus carried labels).
+    */
+  private def seriesCols(df: DataFrame): Seq[String] =
+    df.columns.toSeq.filterNot(Set("timestamp", "value"))
+
+  /** A frame that is folded or joined per (group, step) must be keyed
+    * by exactly the evaluation's series key `gNames` — a count_values
+    * frame (keyed by its value label) or a matched frame carrying
+    * labels holds SEVERAL series per key, which a pooled fold or a
+    * one-to-one join would silently merge.
+    */
+  private def evalKeyed(df: DataFrame, gNames: Seq[String],
+      what: String): DataFrame = {
+    require(seriesCols(df).toSet == gNames.toSet,
+      s"$what must be keyed by the evaluation grouping " +
+        s"(${gNames.mkString(", ")}), got (${seriesCols(df).mkString(", ")})" +
+        " — count_values keys its series by VALUE text and a matched " +
+        "composition adds its carried labels; neither folds or joins " +
+        "per evaluation series")
+    df
+  }
+
+  /** The grouped scan shared by [[eval]] and [[sliding]]: a selector's
+    * rows over [lo, hi] (reported time) as (group cols..., timestamp,
+    * value), group keys derived row-locally from the `labels` map
+    * ([[groupProjection]]'s columns), the raw double value.
+    */
+  private def groupedScan(sel: Selector, gCols: Seq[Column], lo: Long,
+      hi: Long): DataFrame =
+    data.where(scanCond(sel, lo, hi))
+      .select(gCols ++ Seq(shiftedTs(sel), col("value")): _*)
+
+  /** Scalar-literal arithmetic or comparison against a frame's value —
+    * row-local: arithmetic maps the value, comparison FILTERS keeping
+    * it (the V2S rule); `litLeft` keeps the operand order. Shared by
+    * [[eval]]'s grouped leaf and [[sliding]].
+    */
+  private def literalOp(kind: BinKind, v: Double, litLeft: Boolean,
+      df: DataFrame): DataFrame = {
+    def ordered(c: Column): (Column, Column) =
+      if (litLeft) (lit(v), c) else (c, lit(v))
+    if (isComparison(kind)) {
+      val (l, r) = ordered(col("value"))
+      df.where(cmp(kind, l, r))
+    } else {
+      val (l, r) = ordered(col("value").cast("double"))
+      df.withColumn("value", arith(kind, l, r))
+    }
+  }
 
   private def scanValue = col("value")
 
-  private def eval(e: Expr, start: Long, end: Long): TsdbResult = e match {
-    case NumberLit(v) =>
-      // Literal scalars are always Float64 (planner.rs:140-143).
-      TsdbResult(
-        spark.range(1).select(lit(v).cast("double").as("value")),
-        isScalar = true, VType.F64)
+  /** Whole-range evaluation — the ONE recursion behind [[query]]
+    * (`grouping` = None: every selector's samples form one series) and
+    * [[queryBy]] (Some: one series per group), mirroring [[sliding]].
+    * Grouped, it evaluates the LEAF shapes a `by`/`without` clause
+    * reaches down to — [[groupedAggregate]] and [[groupedGetK]] fold
+    * them — and yields (group cols..., timestamp, value) rows:
+    *
+    *  - a selector (timestamp = sample time): one scan, group keys
+    *    derived row-locally from the `labels` map, the raw double value;
+    *  - a range function over a matrix selector or a subquery
+    *    (timestamp = window start): per (group, tumbling window), each
+    *    group's windows seeing only that group's samples;
+    *  - either one under ROW-LOCAL transforms — instant math, scalar-
+    *    literal arithmetic, scalar-literal comparison (a filter keeping
+    *    the value, the V2S rule) — applied as the tree nests them.
+    *
+    * Every other shape refuses under a grouping with one message; the
+    * pooled evaluation accepts the full whole-range algebra below.
+    */
+  private def eval(e: Expr, grouping: Option[Grouping], start: Long,
+      end: Long): TsdbResult = {
+    val (gNames, gCols) = grouping.map(groupProjection).getOrElse((Nil, Nil))
+    def rec(x: Expr): TsdbResult = eval(x, grouping, start, end)
+    def vector(df: DataFrame): TsdbResult =
+      TsdbResult(df, isScalar = false, VType.F64, grouped = grouping.nonEmpty)
+    e match {
+      case sel: Selector =>
+        if (grouping.isEmpty)
+          TsdbResult(select(sel, start, end), isScalar = false,
+            catalog.vtypeOf(sel.name, sel.matchers))
+        else vector(groupedScan(sel, gCols, start, end))
 
-    case sel: Selector =>
-      TsdbResult(select(sel, start, end), isScalar = false,
-        catalog.vtypeOf(sel.name, sel.matchers))
+      case RangeFn(kind, MatrixSelector(sel, rangeMs), fnArgs) =>
+        // Range-function extension (RangeFns.scala contract): tumbling
+        // rangeMs windows over the selector's scan, one row per (group,)
+        // window. Emits a normal vector, so aggregates / topk / binary ops
+        // compose over it through the existing dispatch unchanged.
+        //
+        // Stats pushdown (pooled only): sum/count/min/max/avg_over_time
+        // are exactly the sidecar's summary set, so with a stats table at
+        // hand they answer from covered bucket rows + boundary raw rows
+        // (StatsAggregate.downsample) — the ScanHint optimization applied
+        // per window. Ineligible: label matchers (stats rows aggregate
+        // across a name's label sets) and @/offset (they move the scan
+        // start away from the window alignment start); rate/increase/
+        // delta/last need the raw samples by definition.
+        val statsServed = stats.collect {
+          case (st, bucketMs) if grouping.isEmpty &&
+              sel.matchers.isEmpty && sel.at.isEmpty && sel.offsetMs == 0 =>
+            val pick = kind match {
+              case FnSumOverTime => Some(col("value_sum"))
+              case FnCountOverTime => Some(col("n").cast("double"))
+              case FnMinOverTime => Some(col("min_value"))
+              case FnMaxOverTime => Some(col("max_value"))
+              case FnAvgOverTime => Some(col("avg_value"))
+              case _ => None
+            }
+            pick.map { v =>
+              StatsAggregate
+                .downsample(data, st, sel.name, start, end, bucketMs, rangeMs)
+                .select(col("window_start").as("timestamp"), v.as("value"))
+            }
+        }.flatten
+        // window math runs on the REPORTED time (shiftedTs) so offset
+        // moves windows with the data, like Prometheus
+        def rows =
+          if (grouping.isEmpty) select(sel, start, end)
+          else groupedScan(sel, gCols, start, end)
+        vector(statsServed.getOrElse(RangeFns(kind, rows, rangeMs, start, end,
+          fnArgs, gNames, rateMode)))
 
-    case Aggregate(kind, child, None) =>
-      val c = eval(child, start, end)
-      require(!c.isScalar || c.grouped,
-        "aggregate over a scalar is not supported (reference planner)")
-      // An ungrouped aggregate FOLDS a grouped child like a vector:
-      // `sum(sum by (dc) (m))` — Prometheus' collapse-to-one shape;
-      // count counts the groups. Input is post-aggregation
-      // group-count-sized, so this is a metadata-sized fold.
-      if (c.grouped)
-        aggregate(kind,
-          TsdbResult(c.df.select(col("value")), isScalar = false, c.vtype))
-      else aggregate(kind, c)
+      case RangeFn(kind, SubqueryMatrix(inner, subRange, subStep, soff),
+          fnArgs) =>
+        // Subquery: the inner evaluated slidingly every subStep over
+        // [start, end] becomes a DERIVED series ([[subqueryInner]]), and
+        // the outer fn windows it tumbling exactly like a matrix
+        // selector's samples — `max_over_time(rate(x[5m])[1h:5m])`, the
+        // alerting shape; per group, each user's peak rate per window.
+        // The outer aggregation never touches raw rows again; the step
+        // grid stays aligned to `start`.
+        vector(RangeFns(kind,
+          subqueryInner(inner, grouping, start, end, subStep, soff),
+          subRange, start, end, fnArgs, gNames, rateMode))
 
-    case Aggregate(kind, child, Some(g)) =>
-      // `sum by (user) (...)` — the clause the reference parses then
-      // DROPS (planner.rs:84-88), evaluated for real here.
-      groupedAggregate(kind, child, g, start, end)
+      case InstantFn(kind, child, args) =>
+        // Instant math extension: row-local value map over a vector,
+        // Float64 result like PromQL's math functions. Composes over
+        // selectors, range fns, and binary results alike.
+        val c = rec(child)
+        require(!c.isScalar || c.grouped,
+          s"${kind.name} applies to a vector, not a scalar (use plain arithmetic)")
+        // row-local value maps apply to grouped results unchanged (the
+        // group columns ride along)
+        val mapped =
+          TsdbEngine.instantColumn(kind, args, col("value").cast("double"))
+        TsdbResult(c.df.withColumn("value", mapped),
+          isScalar = c.isScalar, VType.F64, grouped = c.grouped)
 
-    case LimitK(kExpr, child) =>
-      // deterministic series sampling (Prometheus limitk; exact-count
-      // md5-order rule — see Ast.LimitK): orderBy+limit compiles to
-      // TakeOrderedAndProject, a bounded heap over the post-aggregation
-      // group-count-sized frame
-      val k = scalarK(kExpr, start, end)
-      val c = eval(child, start, end)
-      require(c.grouped, "limitk selects SERIES — in the pooled-series " +
-        "model a plain vector is ONE series; aggregate into groups " +
-        "first: limitk(2, sum by (s) (m))")
-      TsdbResult(
-        if (k == 0) c.df.limit(0)
-        else c.df.orderBy(sampleOrder(c.df): _*).limit(k),
-        // sampling FILTERS series — it never changes the child's value
-        // shape, so echo it instead of hardcoding (advice r13)
-        c.isScalar, c.vtype, grouped = true)
+      case BinaryOp(kind, NumberLit(v), rhs, None)
+          if grouping.nonEmpty && !isSetOp(kind) =>
+        vector(literalOp(kind, v, litLeft = true, rec(rhs).df))
+      case BinaryOp(kind, lhs, NumberLit(v), None)
+          if grouping.nonEmpty && !isSetOp(kind) =>
+        vector(literalOp(kind, v, litLeft = false, rec(lhs).df))
 
-    case LimitRatio(r, child) =>
-      require(r >= -1 && r <= 1, s"limit_ratio takes r in [-1, 1], got $r")
-      val c = eval(child, start, end)
-      require(c.grouped, "limit_ratio selects SERIES — in the pooled-" +
-        "series model a plain vector is ONE series; aggregate into " +
-        "groups first: limit_ratio(0.5, sum by (s) (m))")
-      // rank + total over the group-count-sized frame (single-partition
-      // window over POST-AGGREGATION groups — metadata-sized, never the
-      // scan); r ≥ 0 keeps the first round(r·n) groups in md5 order,
-      // r < 0 everything AFTER the first round((1+r)·n) — the exact
-      // complement of the positive arm's count, so limit_ratio(r) and
-      // limit_ratio(r−1) partition even when r·n lands on a .5
-      // boundary (n=5, r=0.5 keeps ranks 1–3; r=−0.5 keeps 4–5, not
-      // 3–5 as the old n−round(−r·n) cut did; advice r13)
-      val wOrd = org.apache.spark.sql.expressions.Window
-        .orderBy(sampleOrder(c.df): _*)
-      val wAll = org.apache.spark.sql.expressions.Window.partitionBy()
-      val ranked = c.df
-        .withColumn("_rk", row_number().over(wOrd))
-        .withColumn("_n", count(lit(1)).over(wAll))
-      val kept =
-        if (r >= 0) ranked.where(col("_rk") <= round(lit(r) * col("_n")))
-        else ranked.where(col("_rk") > round(lit(1 + r) * col("_n")))
-      TsdbResult(kept.drop("_rk", "_n"),
-        c.isScalar, c.vtype, grouped = true)
+      case other if grouping.nonEmpty =>
+        throw new IllegalArgumentException(
+          "grouped evaluation supports a selector or a range function " +
+            "over a matrix selector or a subquery (optionally under " +
+            "instant math or scalar-literal arithmetic/comparison), " +
+            s"got: $other")
 
-    case GetK(top, kExpr, child, grouping) =>
-      val k = scalarK(kExpr, start, end)
-      grouping match {
-        case Some(g) => groupedGetK(top, k, child, g, start, end)
-        case None =>
-          val c = eval(child, start, end)
-          require(!c.isScalar || c.grouped,
-            "topk/bottomk over a scalar is not supported")
-          if (c.grouped) groupRowGetK(top, k, c) else getK(top, k, c)
-      }
+      case NumberLit(v) =>
+        // Literal scalars are always Float64 (planner.rs:140-143).
+        TsdbResult(
+          spark.range(1).select(lit(v).cast("double").as("value")),
+          isScalar = true, VType.F64)
 
-    case BinaryOp(kind, lhs, rhs, matching) =>
-      val l = eval(lhs, start, end)
-      val r = eval(rhs, start, end)
-      if (isSetOp(kind)) setBinary(kind, l, r, matching)
-      else matching match {
-        case Some(m) => groupedBinaryMatched(kind, l, r, m)
-        case None =>
-          if (l.grouped || r.grouped) groupedBinary(kind, l, r)
-          else binary(kind, l, r, start, end)
-      }
+      case Aggregate(kind, child, None) =>
+        val c = rec(child)
+        require(!c.isScalar || c.grouped,
+          "aggregate over a scalar is not supported (reference planner)")
+        // An ungrouped aggregate FOLDS a grouped child like a vector:
+        // `sum(sum by (dc) (m))` — Prometheus' collapse-to-one shape;
+        // count counts the groups. Input is post-aggregation
+        // group-count-sized, so this is a metadata-sized fold.
+        if (c.grouped)
+          aggregate(kind,
+            TsdbResult(c.df.select(col("value")), isScalar = false, c.vtype))
+        else aggregate(kind, c)
 
-    case RangeFn(kind, MatrixSelector(sel, rangeMs), fnArgs) =>
-      // Range-function extension (RangeFns.scala contract): tumbling
-      // rangeMs windows over the selector's scan, one row per window.
-      // Emits a normal vector, so aggregates / topk / binary ops compose
-      // over it through the existing dispatch unchanged.
-      //
-      // Stats pushdown: sum/count/min/max/avg_over_time are exactly the
-      // sidecar's summary set, so with a stats table at hand they answer
-      // from covered bucket rows + boundary raw rows
-      // (StatsAggregate.downsample) — the ScanHint optimization applied
-      // per window. Ineligible: label matchers (stats rows aggregate
-      // across a name's label sets) and @/offset (they move the scan
-      // start away from the window alignment start); rate/increase/
-      // delta/last need the raw samples by definition.
-      val statsServed = stats.collect {
-        case (st, bucketMs)
-            if sel.matchers.isEmpty && sel.at.isEmpty && sel.offsetMs == 0 =>
-          val pick = kind match {
-            case FnSumOverTime => Some(col("value_sum"))
-            case FnCountOverTime => Some(col("n").cast("double"))
-            case FnMinOverTime => Some(col("min_value"))
-            case FnMaxOverTime => Some(col("max_value"))
-            case FnAvgOverTime => Some(col("avg_value"))
-            case _ => None
-          }
-          pick.map { v =>
-            StatsAggregate
-              .downsample(data, st, sel.name, start, end, bucketMs, rangeMs)
-              .select(col("window_start").as("timestamp"), v.as("value"))
-          }
-      }.flatten
-      TsdbResult(
-        statsServed.getOrElse(
-          RangeFns(kind, select(sel, start, end), rangeMs, start, end,
-            fnArgs, rateMode)),
-        isScalar = false, VType.F64)
+      case Aggregate(kind, child, Some(g)) =>
+        // `sum by (user) (...)` — the clause the reference parses then
+        // DROPS (planner.rs:84-88), evaluated for real here.
+        groupedAggregate(kind, child, g, start, end)
 
-    case RangeFn(kind, SubqueryMatrix(inner, subRange, subStep, soff), fnArgs) =>
-      // Subquery: the inner range fn evaluated slidingly every subStep
-      // over [start, end] becomes a DERIVED series, and the outer fn
-      // windows it tumbling exactly like a matrix selector's samples —
-      // `max_over_time(rate(x[5m])[1h:5m])`, the alerting shape. Inner
-      // sample volume is step-count × series bounded (metadata-sized),
-      // so the outer aggregation never touches raw rows again.
-      // `offset` shifts the inner evaluation range back and reports on
-      // the outer clock — the step grid stays aligned to `start`.
-      val derived = reportOnOuterClock(
-        sliding(inner, None, start - soff, end - soff, subStep), soff)
-      TsdbResult(
-        RangeFns(kind, derived, subRange, start, end, fnArgs, rateMode),
-        isScalar = false, VType.F64)
+      case LimitK(kExpr, child) =>
+        // deterministic series sampling (Prometheus limitk; exact-count
+        // md5-order rule — see Ast.LimitK): orderBy+limit compiles to
+        // TakeOrderedAndProject, a bounded heap over the post-aggregation
+        // group-count-sized frame
+        val k = scalarK(kExpr, start, end)
+        val c = rec(child)
+        require(c.grouped, "limitk selects SERIES — in the pooled-series " +
+          "model a plain vector is ONE series; aggregate into groups " +
+          "first: limitk(2, sum by (s) (m))")
+        TsdbResult(
+          if (k == 0) c.df.limit(0)
+          else c.df.orderBy(sampleOrder(c.df): _*).limit(k),
+          // sampling FILTERS series — it never changes the child's value
+          // shape, so echo it instead of hardcoding (advice r13)
+          c.isScalar, c.vtype, grouped = true)
 
-    case RangeFn(_, other, _) =>
-      throw new IllegalArgumentException(
-        s"range function requires a matrix selector child, got: $other")
+      case LimitRatio(r, child) =>
+        require(r >= -1 && r <= 1, s"limit_ratio takes r in [-1, 1], got $r")
+        val c = rec(child)
+        require(c.grouped, "limit_ratio selects SERIES — in the pooled-" +
+          "series model a plain vector is ONE series; aggregate into " +
+          "groups first: limit_ratio(0.5, sum by (s) (m))")
+        // rank + total over the group-count-sized frame (single-partition
+        // window over POST-AGGREGATION groups — metadata-sized, never the
+        // scan); r ≥ 0 keeps the first round(r·n) groups in md5 order,
+        // r < 0 everything AFTER the first round((1+r)·n) — the exact
+        // complement of the positive arm's count, so limit_ratio(r) and
+        // limit_ratio(r−1) partition even when r·n lands on a .5
+        // boundary (n=5, r=0.5 keeps ranks 1–3; r=−0.5 keeps 4–5, not
+        // 3–5 as the old n−round(−r·n) cut did; advice r13)
+        val wOrd = org.apache.spark.sql.expressions.Window
+          .orderBy(sampleOrder(c.df): _*)
+        val wAll = org.apache.spark.sql.expressions.Window.partitionBy()
+        val ranked = c.df
+          .withColumn("_rk", row_number().over(wOrd))
+          .withColumn("_n", count(lit(1)).over(wAll))
+        val kept =
+          if (r >= 0) ranked.where(col("_rk") <= round(lit(r) * col("_n")))
+          else ranked.where(col("_rk") > round(lit(1 + r) * col("_n")))
+        TsdbResult(kept.drop("_rk", "_n"),
+          c.isScalar, c.vtype, grouped = true)
 
-    case _: SubqueryMatrix =>
-      throw new IllegalArgumentException(
-        "a subquery is only valid inside a range function")
+      case GetK(top, kExpr, child, grouping) =>
+        val k = scalarK(kExpr, start, end)
+        grouping match {
+          case Some(g) => groupedGetK(top, k, child, g, start, end)
+          case None =>
+            val c = rec(child)
+            require(!c.isScalar || c.grouped,
+              "topk/bottomk over a scalar is not supported")
+            if (c.grouped) groupRowGetK(top, k, c) else getK(top, k, c)
+        }
 
-    case InstantFn(kind, child, args) =>
-      // Instant math extension: row-local value map over a vector,
-      // Float64 result like PromQL's math functions. Composes over
-      // selectors, range fns, and binary results alike.
-      val c = eval(child, start, end)
-      require(!c.isScalar || c.grouped,
-        s"${kind.name} applies to a vector, not a scalar (use plain arithmetic)")
-      // row-local value maps apply to grouped results unchanged (the
-      // group columns ride along)
-      val mapped =
-        TsdbEngine.instantColumn(kind, args, col("value").cast("double"))
-      TsdbResult(c.df.withColumn("value", mapped),
-        isScalar = c.isScalar, VType.F64, grouped = c.grouped)
+      case BinaryOp(kind, lhs, rhs, matching) =>
+        val l = rec(lhs)
+        val r = rec(rhs)
+        if (isSetOp(kind)) setBinary(kind, l, r, matching)
+        else matching match {
+          case Some(m) => groupedBinaryMatched(kind, l, r, m)
+          case None =>
+            if (l.grouped || r.grouped) groupedBinary(kind, l, r)
+            else binary(kind, l, r, start, end)
+        }
 
-    case HistogramQuantile(phi, child) =>
-      histogramQuantile(phi, eval(child, start, end))
+      case RangeFn(_, other, _) =>
+        throw new IllegalArgumentException(
+          s"range function requires a matrix selector child, got: $other")
 
-    case LabelReplace(child, dst, repl, src, regex) =>
-      // Row-local group-label rewrite. Grouped (`by`) results carry one
-      // addressable column per label, so the rewrite is a projection —
-      // no exchange, and the result composes with nested rollups,
-      // grouped binary, and set operators like any grouped result.
-      val c = eval(child, start, end)
-      require(c.grouped, "label_replace operates on a grouped (`by`) " +
-        "result — aggregate with `by (...)` first so labels are columns")
-      val cols = c.df.columns
-      require(cols.contains(src),
-        s"label_replace source label `$src` is not a group column of " +
-          s"the operand (${cols.init.mkString(", ")})")
-      val reserved = Set("timestamp", "value", "wstart", "_rk", "labels")
-      require(!reserved.contains(dst),
-        s"label_replace destination `$dst` collides with a result column")
-      // anchored like Prometheus (the regex must match the WHOLE value);
-      // malformed patterns reject at plan time, loudly
-      val anchored = "^(?:" + regex + ")$"
-      java.util.regex.Pattern.compile(anchored)
-      val srcC = coalesce(col(src).cast("string"), lit(""))
-      val expanded = regexp_replace(srcC, lit(anchored), lit(repl))
-      val existing =
-        if (cols.contains(dst)) col(dst) else lit(null).cast("string")
-      // an empty expansion REMOVES the label (null — the engine's
-      // missing-label encoding); no match keeps the existing dst
-      val newDst = when(srcC.rlike(anchored),
-        when(expanded === "", lit(null)).otherwise(expanded))
-        .otherwise(existing)
-      val out =
-        if (cols.contains(dst))
-          c.df.select(cols.map(n =>
-            if (n == dst) newDst.as(dst) else col(n)).toSeq: _*)
-        else
-          c.df.select((cols.init.map(col) :+ newDst.as(dst)) :+
-            col(cols.last): _*)
-      TsdbResult(out, c.isScalar, c.vtype, grouped = true)
+      case _: SubqueryMatrix =>
+        throw new IllegalArgumentException(
+          "a subquery is only valid inside a range function")
 
-    case LabelJoin(child, dst, sep, srcs) =>
-      val c = eval(child, start, end)
-      require(c.grouped, "label_join operates on a grouped (`by`) " +
-        "result — aggregate with `by (...)` first so labels are columns")
-      val cols = c.df.columns
-      val missing = srcs.filterNot(cols.contains)
-      require(missing.isEmpty,
-        s"label_join source label(s) not group columns of the operand: " +
-          s"${missing.mkString(", ")} (have ${cols.init.mkString(", ")})")
-      val reserved = Set("timestamp", "value", "wstart", "_rk", "labels")
-      require(!reserved.contains(dst),
-        s"label_join destination `$dst` collides with a result column")
-      // absent source labels contribute "" (Prometheus' rule)
-      val joined = concat_ws(sep,
-        srcs.map(s0 => coalesce(col(s0).cast("string"), lit(""))): _*)
-      val out =
-        if (cols.contains(dst))
-          c.df.select(cols.map(n =>
-            if (n == dst) joined.as(dst) else col(n)).toSeq: _*)
-        else
-          c.df.select((cols.init.map(col) :+ joined.as(dst)) :+
-            col(cols.last): _*)
-      TsdbResult(out, c.isScalar, c.vtype, grouped = true)
+      case HistogramQuantile(phi, child) =>
+        histogramQuantile(phi, rec(child))
 
-    case Sort(desc, child) =>
-      // presentation ordering by value (PromQL sort/sort_desc); ties
-      // break on the remaining columns so the order is total. The
-      // DataFrame contract can't pin downstream order, but the CLI /
-      // HTTP / CSV surfaces render in this order.
-      val c = eval(child, start, end)
-      require(!c.isScalar || c.grouped,
-        "sort applies to a vector or grouped result, not a scalar")
-      val rest = c.df.columns.filterNot(_ == "value").map(col(_).asc)
-      val ord = (if (desc) col("value").desc else col("value").asc) +: rest
-      TsdbResult(c.df.orderBy(ord.toSeq: _*), c.isScalar, c.vtype,
-        grouped = c.grouped, multiRow = c.multiRow)
+      case LabelReplace(child, dst, repl, src, regex) =>
+        // Row-local group-label rewrite. Grouped (`by`) results carry one
+        // addressable column per label, so the rewrite is a projection —
+        // no exchange, and the result composes with nested rollups,
+        // grouped binary, and set operators like any grouped result.
+        val c = rec(child)
+        require(c.grouped, "label_replace operates on a grouped (`by`) " +
+          "result — aggregate with `by (...)` first so labels are columns")
+        val cols = c.df.columns
+        require(cols.contains(src),
+          s"label_replace source label `$src` is not a group column of " +
+            s"the operand (${cols.init.mkString(", ")})")
+        val reserved = Set("timestamp", "value", "wstart", "_rk", "labels")
+        require(!reserved.contains(dst),
+          s"label_replace destination `$dst` collides with a result column")
+        // anchored like Prometheus (the regex must match the WHOLE value);
+        // malformed patterns reject at plan time, loudly
+        val anchored = "^(?:" + regex + ")$"
+        java.util.regex.Pattern.compile(anchored)
+        val srcC = coalesce(col(src).cast("string"), lit(""))
+        val expanded = regexp_replace(srcC, lit(anchored), lit(repl))
+        val existing =
+          if (cols.contains(dst)) col(dst) else lit(null).cast("string")
+        // an empty expansion REMOVES the label (null — the engine's
+        // missing-label encoding); no match keeps the existing dst
+        val newDst = when(srcC.rlike(anchored),
+          when(expanded === "", lit(null)).otherwise(expanded))
+          .otherwise(existing)
+        val out =
+          if (cols.contains(dst))
+            c.df.select(cols.map(n =>
+              if (n == dst) newDst.as(dst) else col(n)).toSeq: _*)
+          else
+            c.df.select((cols.init.map(col) :+ newDst.as(dst)) :+
+              col(cols.last): _*)
+        TsdbResult(out, c.isScalar, c.vtype, grouped = true)
 
-    case SortByLabel(desc, child, labels) =>
-      // presentation ordering by label columns (experimental
-      // Prometheus pair to sort/sort_desc); grouped results only —
-      // plain vectors carry no label columns
-      val c = eval(child, start, end)
-      require(c.grouped,
-        "sort_by_label applies to a grouped (`by`) result")
-      val missing = labels.filterNot(c.df.columns.contains)
-      require(missing.isEmpty,
-        s"sort_by_label: no such label column(s): ${missing.mkString(", ")}")
-      val rest = c.df.columns.filterNot(labels.contains).map(col(_).asc)
-      val keyed = labels.map(l => if (desc) col(l).desc else col(l).asc)
-      TsdbResult(c.df.orderBy(keyed ++ rest: _*), c.isScalar, c.vtype,
-        grouped = true, multiRow = c.multiRow)
+      case LabelJoin(child, dst, sep, srcs) =>
+        val c = rec(child)
+        require(c.grouped, "label_join operates on a grouped (`by`) " +
+          "result — aggregate with `by (...)` first so labels are columns")
+        val cols = c.df.columns
+        val missing = srcs.filterNot(cols.contains)
+        require(missing.isEmpty,
+          s"label_join source label(s) not group columns of the operand: " +
+            s"${missing.mkString(", ")} (have ${cols.init.mkString(", ")})")
+        val reserved = Set("timestamp", "value", "wstart", "_rk", "labels")
+        require(!reserved.contains(dst),
+          s"label_join destination `$dst` collides with a result column")
+        // absent source labels contribute "" (Prometheus' rule)
+        val joined = concat_ws(sep,
+          srcs.map(s0 => coalesce(col(s0).cast("string"), lit(""))): _*)
+        val out =
+          if (cols.contains(dst))
+            c.df.select(cols.map(n =>
+              if (n == dst) joined.as(dst) else col(n)).toSeq: _*)
+          else
+            c.df.select((cols.init.map(col) :+ joined.as(dst)) :+
+              col(cols.last): _*)
+        TsdbResult(out, c.isScalar, c.vtype, grouped = true)
 
-    case TimestampFn(child) =>
-      // each sample's own timestamp in seconds as the value; labels
-      // (columns) ride along. Only results that still carry sample
-      // timestamps qualify — aggregates have folded theirs away.
-      val c = eval(child, start, end)
-      require(c.df.columns.contains("timestamp"),
-        "timestamp() needs a result that still carries sample " +
-          "timestamps (a plain vector; aggregated results do not)")
-      TsdbResult(
-        c.df.withColumn("value", col("timestamp").cast("double") / 1000.0),
-        c.isScalar, VType.F64, grouped = c.grouped)
+      case Sort(desc, child) =>
+        // presentation ordering by value (PromQL sort/sort_desc); ties
+        // break on the remaining columns so the order is total. The
+        // DataFrame contract can't pin downstream order, but the CLI /
+        // HTTP / CSV surfaces render in this order.
+        val c = rec(child)
+        require(!c.isScalar || c.grouped,
+          "sort applies to a vector or grouped result, not a scalar")
+        val rest = c.df.columns.filterNot(_ == "value").map(col(_).asc)
+        val ord = (if (desc) col("value").desc else col("value").asc) +: rest
+        TsdbResult(c.df.orderBy(ord.toSeq: _*), c.isScalar, c.vtype,
+          grouped = c.grouped, multiRow = c.multiRow)
 
-    case TimeFn =>
-      // the eval timestamp, seconds — `end` in the whole-range model
-      TsdbResult(
-        spark.range(1).select(lit(end / 1000.0).as("value")),
-        isScalar = true, VType.F64)
+      case SortByLabel(desc, child, labels) =>
+        // presentation ordering by label columns (experimental
+        // Prometheus pair to sort/sort_desc); grouped results only —
+        // plain vectors carry no label columns
+        val c = rec(child)
+        require(c.grouped,
+          "sort_by_label applies to a grouped (`by`) result")
+        val missing = labels.filterNot(c.df.columns.contains)
+        require(missing.isEmpty,
+          s"sort_by_label: no such label column(s): ${missing.mkString(", ")}")
+        val rest = c.df.columns.filterNot(labels.contains).map(col(_).asc)
+        val keyed = labels.map(l => if (desc) col(l).desc else col(l).asc)
+        TsdbResult(c.df.orderBy(keyed ++ rest: _*), c.isScalar, c.vtype,
+          grouped = true, multiRow = c.multiRow)
 
-    case ScalarFn(child) =>
-      // exactly-one-element vector → its value; anything else → NaN.
-      // One aggregate decides it in-plan: no driver-side count.
-      val c = eval(child, start, end)
-      require(!c.isScalar && !c.grouped,
-        "scalar() takes an instant vector (scalars and grouped results " +
-          "are rejected, as in Prometheus)")
-      TsdbResult(
-        c.df.agg(when(count(lit(1)) === 1, max(col("value").cast("double")))
-          .otherwise(lit(Double.NaN)).as("value")),
-        isScalar = true, VType.F64)
+      case TimestampFn(child) =>
+        // each sample's own timestamp in seconds as the value; labels
+        // (columns) ride along. Only results that still carry sample
+        // timestamps qualify — aggregates have folded theirs away.
+        val c = rec(child)
+        require(c.df.columns.contains("timestamp"),
+          "timestamp() needs a result that still carries sample " +
+            "timestamps (a plain vector; aggregated results do not)")
+        TsdbResult(
+          c.df.withColumn("value", col("timestamp").cast("double") / 1000.0),
+          c.isScalar, VType.F64, grouped = c.grouped)
 
-    case VectorFn(child) =>
-      // scalar → one unlabeled sample at the eval timestamp (`end`).
-      val c = eval(child, start, end)
-      require(c.isScalar && !c.grouped && !c.multiRow,
-        "vector() takes a single-row scalar expression")
-      TsdbResult(
-        c.df.select(lit(end).as("timestamp"),
-          col("value").cast("double").as("value")),
-        isScalar = false, VType.F64)
+      case TimeFn =>
+        // the eval timestamp, seconds — `end` in the whole-range model
+        TsdbResult(
+          spark.range(1).select(lit(end / 1000.0).as("value")),
+          isScalar = true, VType.F64)
 
-    case AbsentFn(child) =>
-      // ONE row of 1.0 when the child vector is EMPTY over the range —
-      // the gap alarm. A left-anti join against a LIMIT-1 probe of the
-      // child keeps the whole decision on the executors (no driver
-      // count); the probe short-circuits on the first sample found.
-      val c = eval(child, start, end)
-      require(!c.isScalar && !c.grouped,
-        "absent() takes a plain vector expression (aggregates and " +
-          "grouped results answer their own emptiness by arity)")
-      val probe = c.df.select(lit(1).as("one")).limit(1)
-      val out = spark.range(1).join(probe, lit(true), "left_anti")
-        .select(lit(1.0).as("value"))
-      TsdbResult(out, isScalar = true, VType.F64)
+      case ScalarFn(child) =>
+        // exactly-one-element vector → its value; anything else → NaN.
+        // One aggregate decides it in-plan: no driver-side count.
+        val c = rec(child)
+        require(!c.isScalar && !c.grouped,
+          "scalar() takes an instant vector (scalars and grouped results " +
+            "are rejected, as in Prometheus)")
+        TsdbResult(
+          c.df.agg(when(count(lit(1)) === 1, max(col("value").cast("double")))
+            .otherwise(lit(Double.NaN)).as("value")),
+          isScalar = true, VType.F64)
 
-    case _: MatrixSelector =>
-      // Preserve the reference's rejection for bare matrix selectors
-      // (planner.rs rejects them outright; only RangeFn may consume one).
-      throw new IllegalArgumentException(
-        "matrix selector is only valid inside a range function")
+      case VectorFn(child) =>
+        // scalar → one unlabeled sample at the eval timestamp (`end`).
+        val c = rec(child)
+        require(c.isScalar && !c.grouped && !c.multiRow,
+          "vector() takes a single-row scalar expression")
+        TsdbResult(
+          c.df.select(lit(end).as("timestamp"),
+            col("value").cast("double").as("value")),
+          isScalar = false, VType.F64)
+
+      case AbsentFn(child) =>
+        // ONE row of 1.0 when the child vector is EMPTY over the range —
+        // the gap alarm. A left-anti join against a LIMIT-1 probe of the
+        // child keeps the whole decision on the executors (no driver
+        // count); the probe short-circuits on the first sample found.
+        val c = rec(child)
+        require(!c.isScalar && !c.grouped,
+          "absent() takes a plain vector expression (aggregates and " +
+            "grouped results answer their own emptiness by arity)")
+        val probe = c.df.select(lit(1).as("one")).limit(1)
+        val out = spark.range(1).join(probe, lit(true), "left_anti")
+          .select(lit(1.0).as("value"))
+        TsdbResult(out, isScalar = true, VType.F64)
+
+      case _: MatrixSelector =>
+        // Preserve the reference's rejection for bare matrix selectors
+        // (planner.rs rejects them outright; only RangeFn may consume one).
+        throw new IllegalArgumentException(
+          "matrix selector is only valid inside a range function")
+    }
   }
 
   /** histogram_quantile — Prometheus' bucket-interpolation quantile
@@ -1092,8 +1179,9 @@ final class TsdbEngine(
     *    sorted — layout-independent; keys and values percent-escaped per
     *    [[LabelCodec]]'s structural set, so adversarial values carrying
     *    `,`/`=` cannot merge two distinct groups).
-    *  - The child may be a selector or a range function over a matrix
-    *    selector, optionally under ROW-LOCAL transforms: instant math,
+    *  - The child is one of [[eval]]'s grouped leaves: a selector or
+    *    a range function over a matrix selector or a subquery,
+    *    optionally under ROW-LOCAL transforms: instant math,
     *    scalar-literal arithmetic (`sum by (u) (purchase * 2)`), and
     *    scalar-literal comparison — a filter keeping the value, the
     *    V2S rule (`sum by (u) (purchase > 100)`). A range-fn child
@@ -1101,8 +1189,7 @@ final class TsdbEngine(
     *    see only that group's samples — and the outer aggregate then
     *    folds each group's windows (this engine's whole-range model:
     *    plain `sum(rate(m[1d]))` folds windows too).
-    *  - Values compute in Float64 (the grouped surface matches
-    *    [[aggregateBy]], including count → double).
+    *  - Values compute in Float64, including count → double.
     *
     * Scale shape: one scan, group keys derived row-locally from the
     * `labels` map, one exchange on (groups[, wstart]) — group count
@@ -1134,34 +1221,37 @@ final class TsdbEngine(
       nestedGroupedAggregate(kind, child, Grouping(by = true, Nil),
         g, start, end)
     case _ =>
-      val (rows, gNames) = groupedVector(child, g, start, end)
-      kind match {
-        case AggCountValues(label) =>
-          // the value-string column joins the group keys:
-          // `count_values("v", m) by (user)` — per (user, value) counts
-          requireValueLabel(label, gNames)
-          val out = rows
-            .groupBy(gNames.map(col) :+
-              col("value").cast("string").as(label): _*)
-            .agg(count(lit(1)).cast("double").as("value"))
-          TsdbResult(out, isScalar = true, VType.F64, grouped = true)
-        case _ =>
-          val out =
-            rows.groupBy(gNames.map(col): _*).agg(aggColumn(kind).as("value"))
-          // empty-set arity (aggregate.rs:35-75): `by ()` over nothing
-          // emits no row for sum/avg/min/max but count → 0, like the
-          // ungrouped form
-          val arity =
-            if (kind == AggCount) out else out.where(col("value").isNotNull)
-          TsdbResult(arity, isScalar = true, VType.F64, grouped = gNames.nonEmpty)
-      }
+      foldGroups(kind, eval(child, Some(g), start, end).df,
+        groupProjection(g)._1)
   }
 
-  /** The grouped surface's aggregate column (count → double, matching
-    * [[aggregateBy]]). Shared by the one-level and nested paths, and by
-    * the ungrouped form for the Float64 family. count_values changes
-    * the KEY SET, so it routes through the callers' grouped-keys
-    * special case instead.
+  /** The grouped fold shared by the one-level and nested paths: `rows`
+    * (keys..., [timestamp,] value) aggregated per key tuple.
+    */
+  private def foldGroups(kind: AggKind, rows: DataFrame,
+      keys: Seq[String]): TsdbResult = kind match {
+    case AggCountValues(label) =>
+      // the value-string column joins the group keys:
+      // `count_values("v", m) by (user)` — per (user, value) counts
+      requireValueLabel(label, keys)
+      val out = rows
+        .groupBy(keys.map(col) :+ col("value").cast("string").as(label): _*)
+        .agg(count(lit(1)).cast("double").as("value"))
+      TsdbResult(out, isScalar = true, VType.F64, grouped = true)
+    case _ =>
+      val out = rows.groupBy(keys.map(col): _*).agg(aggColumn(kind).as("value"))
+      // empty-set arity (aggregate.rs:35-75): `by ()` over nothing
+      // emits no row for sum/avg/min/max but count → 0, like the
+      // ungrouped form
+      val arity =
+        if (kind == AggCount) out else out.where(col("value").isNotNull)
+      TsdbResult(arity, isScalar = true, VType.F64, grouped = keys.nonEmpty)
+  }
+
+  /** The grouped surface's aggregate column (count → double). Shared
+    * by [[foldGroups]] and by the ungrouped form for the Float64
+    * family. count_values changes the KEY SET, so it routes through
+    * [[foldGroups]]' grouped-keys special case instead.
     */
   private def aggColumn(kind: AggKind): Column = kind match {
     case AggSum => sum(col("value"))
@@ -1213,7 +1303,7 @@ final class TsdbEngine(
     */
   private def nestedGroupedAggregate(kind: AggKind, child: Expr,
       innerG: Grouping, g: Grouping, start: Long, end: Long): TsdbResult = {
-    val c = eval(child, start, end)
+    val c = eval(child, None, start, end)
     val (rows, keys) =
       if (innerG.by) {
         val innerLabels = c.df.columns.init.toSeq
@@ -1237,8 +1327,7 @@ final class TsdbEngine(
           val bad = g.labels.filter(reserved)
           require(bad.isEmpty,
             s"grouping labels collide with result columns: ${bad.mkString(", ")}")
-          val keyCols = g.labels.map(k =>
-            unescapeLabelCol(element_at(m, lit(LabelCodec.escape(k)))).as(k))
+          val keyCols = g.labels.map(k => canonLabel(k).as(k))
           (c.df.select(keyCols :+ col("value"): _*), g.labels)
         } else {
           // key subtraction ON the canonical map; "" (empty remaining
@@ -1253,30 +1342,24 @@ final class TsdbEngine(
           (c.df.select(canon.as("labels"), col("value")), Seq("labels"))
         }
       }
-    kind match {
-      case AggCountValues(label) =>
-        requireValueLabel(label, keys)
-        val out = rows
-          .groupBy(keys.map(col) :+ col("value").cast("string").as(label): _*)
-          .agg(count(lit(1)).cast("double").as("value"))
-        TsdbResult(out, isScalar = true, VType.F64, grouped = true)
-      case _ =>
-        val out =
-          rows.groupBy(keys.map(col): _*).agg(aggColumn(kind).as("value"))
-        val arity =
-          if (kind == AggCount) out else out.where(col("value").isNotNull)
-        TsdbResult(arity, isScalar = true, VType.F64, grouped = keys.nonEmpty)
-    }
+    foldGroups(kind, rows, keys)
   }
 
-  /** Inverse of [[LabelCodec.escapeCol]] for re-opening the canonical group
-    * string: decode the six codes, `%25` LAST (escape encoded `%`
-    * first, so any `%XX` in the canonical is one of these six).
+  /** One label's VALUE re-opened from a canonical without-group string
+    * column (`labels` unless given): probe the escaped key in the
+    * escaped k=v,k=v map text, then decode the hit — the inverse of
+    * [[LabelCodec.escapeCol]]: the six codes, `%25` LAST (escape
+    * encodes `%` first, so any `%XX` in the canonical is one of these
+    * six). null = label absent (the by-column convention, so the
+    * null-safe join keys match missing labels).
     */
-  private def unescapeLabelCol(c: Column): Column =
+  private def canonLabel(k: String, canon: Column = col("labels")): Column =
     Seq("%3D" -> "=", "%2C" -> ",", "%09" -> "\t",
         "%0A" -> "\n", "%0D" -> "\r", "%25" -> "%")
-      .foldLeft(c) { case (acc, (enc, ch)) => replace(acc, lit(enc), lit(ch)) }
+      .foldLeft(element_at(str_to_map(canon, lit(","), lit("=")),
+        lit(LabelCodec.escape(k)))) {
+        case (acc, (enc, ch)) => replace(acc, lit(enc), lit(ch))
+      }
 
   /** topk/bottomk over a GROUPED child — `topk(3, sum by (user)
     * (purchase))`, the "top 3 users" query: the k best GROUP ROWS by
@@ -1300,7 +1383,8 @@ final class TsdbEngine(
   /** Grouped top-k/bottom-k — `topk(3, purchase) by (user)`: the k
     * best samples of EACH group by value (ties toward newer samples,
     * the ungrouped GetK rule; k = 0 → empty, k > group size → the whole
-    * group). Emits (groups..., value) rows, k per group. The rank
+    * group) over one of [[eval]]'s grouped leaves. Emits (groups...,
+    * value) rows, k per group. The rank
     * window partitions on the group keys — per-group bounded, never a
     * global order; `by ()` is rejected (use the ungrouped form, which
     * compiles to TakeOrderedAndProject's bounded heap).
@@ -1311,7 +1395,8 @@ final class TsdbEngine(
     // scale-killer the ungrouped TakeOrderedAndProject form avoids
     require(!(g.by && g.labels.isEmpty),
       "topk/bottomk by () is the ungrouped form — drop the modifier")
-    val (rows, gNames) = groupedVector(child, g, start, end)
+    val rows = eval(child, Some(g), start, end).df
+    val gNames = groupProjection(g)._1
     val out =
       if (k == 0) rows.select(gNames.map(col) :+ col("value"): _*).limit(0)
       else {
@@ -1647,16 +1732,9 @@ final class TsdbEngine(
           s"carried label(s) already exist on the many side: " +
             s"${clash.mkString(", ")}")
     }
-    // one key's VALUE re-opened from the canonical without-group
-    // string: probe the escaped k in the escaped k=v,k=v map text,
-    // unescape the hit; null = label absent (the by-column convention,
-    // so the null-safe join key matches missing labels)
-    def canonKey(k: String): Column =
-      unescapeLabelCol(element_at(
-        str_to_map(col("labels"), lit(","), lit("=")),
-        lit(LabelCodec.escape(k))))
+    // the key labels' VALUES re-opened from the canonical string
     def reopened(df: DataFrame): DataFrame =
-      key.foldLeft(df)((d, k0) => d.withColumn(k0, canonKey(k0)))
+      key.foldLeft(df)((d, k0) => d.withColumn(k0, canonLabel(k0)))
     val manyKeyed = if (manyCanonical) reopened(many) else many
     // With carried labels, key uniqueness is no longer structural
     // (the one side's grouping is key ∪ carry): pre-fold the one side
@@ -1671,17 +1749,13 @@ final class TsdbEngine(
     val oneKeyed =
       if (oneCanonical) {
         // carried label values re-open from the (unique) canonical
-        // string itself — the same str_to_map probe as the key columns
-        def carried(c0: String): Column =
-          unescapeLabelCol(element_at(
-            str_to_map(col("_lmin"), lit(","), lit("=")),
-            lit(LabelCodec.escape(c0))))
+        // string itself — the same probe as the key columns
         reopened(one).groupBy(foldKey.map(col): _*)
           .agg(min(col("labels")).as("_lmin"),
             max(col("labels")).as("_lmax"),
             first(col("value")).as("value"))
           .select((foldKey.map(col) ++ carry.map(c0 =>
-            when(col("_lmin") <=> col("_lmax"), carried(c0))
+            when(col("_lmin") <=> col("_lmax"), canonLabel(c0, col("_lmin")))
               .otherwise(raise_error(concat(
                 lit("on(...) group_left/right: the without-grouped " +
                   "'one' side is not unique per match key ("),
@@ -1728,20 +1802,15 @@ final class TsdbEngine(
         .as("value"): _*)
   }
 
-  /** The shared grouped evaluation under a `by`/`without` clause:
-    * returns ((groups..., timestamp, value) rows, group column names).
-    * The child may be a selector or a range function over a matrix
-    * selector (timestamp = window start there), optionally wrapped in
-    * row-local transforms — instant math, scalar-literal arithmetic,
-    * scalar-literal comparison-as-filter — applied outside-in exactly
-    * as the expression tree nests them. One scan; group keys derived
-    * row-locally from the `labels` map.
-    */
   /** Group-key projection for a by/without clause over the long-format
-    * scan — shared by the string surface ([[groupedVector]]) and the
-    * grouped range/sliding APIs. `by` yields one column per label
-    * (null for a missing label); `without` yields one canonical
-    * `k=v,k=v` column of the remaining label set, named `labels`.
+    * scan — the group columns of [[groupedScan]], shared by the
+    * whole-range and sliding evaluations. `by` yields one column per
+    * label (null for a missing label); `without` yields one canonical
+    * `k=v,k=v` column of the remaining label set, named `labels` (the
+    * escaping lives in LabelCodec.escapeCol / canonCol since round 12
+    * — shared with the grouped-recording join keys, so the sites
+    * cannot drift; [[canonLabel]] is the engine-side inverse for
+    * re-opening canonical strings).
     */
   private def groupProjection(g: Grouping): (Seq[String], Seq[Column]) = {
     // "labels" is reserved too (matching the sibling grouped sites):
@@ -1767,179 +1836,6 @@ final class TsdbEngine(
       (Seq("labels"), Seq(LabelCodec.canonCol(mf).as("labels")))
     }
   }
-
-  // (the `without` canonical escaping lives in LabelCodec.escapeCol /
-  // canonCol since round 12 — shared with the grouped-recording join
-  // keys, so the sites cannot drift; unescapeLabelCol below stays the
-  // engine-side inverse for re-opening canonical strings)
-
-  private def groupedVector(child: Expr, g: Grouping,
-      start: Long, end: Long): (DataFrame, Seq[String]) = {
-    val (gNames, gCols) = groupProjection(g)
-    // peel row-local wrappers (applied back innermost-first): instant
-    // math maps the value; scalar-literal arithmetic maps it; scalar-
-    // literal comparison filters keeping the value (the V2S rule)
-    def unwrap(e: Expr, ops: List[DataFrame => DataFrame])
-        : (Expr, List[DataFrame => DataFrame]) = e match {
-      case InstantFn(k, c, a) => unwrap(c, ((df: DataFrame) =>
-        df.withColumn("value",
-          TsdbEngine.instantColumn(k, a, col("value").cast("double")))) :: ops)
-      case BinaryOp(k, c, NumberLit(v), None) if !isComparison(k) =>
-        unwrap(c, ((df: DataFrame) => df.withColumn("value",
-          arith(k, col("value").cast("double"), lit(v)))) :: ops)
-      case BinaryOp(k, NumberLit(v), c, None) if !isComparison(k) =>
-        unwrap(c, ((df: DataFrame) => df.withColumn("value",
-          arith(k, lit(v), col("value").cast("double")))) :: ops)
-      case BinaryOp(k, c, NumberLit(v), None) =>
-        unwrap(c, ((df: DataFrame) =>
-          df.where(cmp(k, col("value"), lit(v)))) :: ops)
-      case BinaryOp(k, NumberLit(v), c, None) =>
-        unwrap(c, ((df: DataFrame) =>
-          df.where(cmp(k, lit(v), col("value")))) :: ops)
-      case other => (other, ops)
-    }
-    val (core, ops) = unwrap(child, Nil)
-    def applyOps(df: DataFrame): DataFrame = ops.foldLeft(df)((d, f) => f(d))
-    val rows = core match {
-      case sel: Selector =>
-        applyOps(data
-          .where(scanCond(sel, start, end))
-          .select(gCols ++ Seq(shiftedTs(sel),
-            col("value").cast("double").as("value")): _*))
-      case RangeFn(rk, MatrixSelector(sel, rangeMs), fnArgs) =>
-        require(rk != FnAbsentOverTime,
-          "absent_over_time has no grouped form (absence is not " +
-            "attributable to a label value)")
-        // window math runs on the REPORTED time (shiftedTs) so offset
-        // moves windows with the data, like Prometheus
-        val base = data
-          .where(scanCond(sel, start, end))
-          .select(gCols ++ Seq(shiftedTs(sel),
-            col("value").cast("double").as("value")): _*)
-          .select(gNames.map(col) ++ Seq(
-            (col("timestamp") -
-              pmod(col("timestamp") - start, lit(rangeMs))).as("wstart"),
-            col("timestamp"), col("value")): _*)
-        applyOps(
-          RangeFns.aggWindows(rk, base, fnArgs, gNames :+ "wstart",
-            RangeFns.extrapolateSpec(rk, rateMode, col("wstart"), rangeMs))
-            .withColumnRenamed("wstart", "timestamp"))
-      case other => throw new IllegalArgumentException(
-        "grouped evaluation supports a selector or a range function " +
-          "over a matrix selector (optionally under instant math or " +
-          s"scalar-literal arithmetic/comparison), got: $other")
-    }
-    (rows, gNames)
-  }
-
-  /** Grouped aggregates — the `sum by (label)` extension the reference
-    * parses but ignores (SURVEY §2 row 7): per-label-value whole-range
-    * aggregation over a selector, exactly the string surface's `kind by
-    * (labelKey) (selector)` with the key column named `group`. Returns
-    * (group, value) rows.
-    */
-  def aggregateBy(selector: String, kind: AggKind, labelKey: String,
-      startMs: Long, endMs: Long): DataFrame = {
-    val sel = PromParser.parse(selector) match {
-      case s: Selector => s
-      case other => throw new IllegalArgumentException(s"not a selector: $other")
-    }
-    groupedAggregate(kind, sel, Grouping(by = true, List(labelKey)),
-      startMs, endMs).df.withColumnRenamed(labelKey, "group")
-  }
-
-  /** Grouped range functions — the `by (label)` extension applied to the
-    * range-fn family (mirrors [[aggregateBy]] for whole-range
-    * aggregates): per-(label value, tumbling window) results as
-    * (group, timestamp, value) rows. `promql` must be a range function
-    * over a matrix selector; each group's windows see only that group's
-    * samples (the per-series dashboard panel: `rate(metric[5m]) by
-    * (instance)`). absent_over_time is rejected — absence is not
-    * attributable to a label value.
-    *
-    * Scale shape: identical to the ungrouped form with (group, wstart)
-    * as the one exchange key — group count multiplies output rows, not
-    * passes over the scan.
-    */
-  def rangeAggregateBy(promql: String, labelKey: String,
-      startMs: Long, endMs: Long): DataFrame =
-    rangeAggregateBy(promql, Grouping(by = true, List(labelKey)),
-      startMs, endMs).withColumnRenamed(labelKey, "group")
-
-  /** [[rangeAggregateBy]] generalized to a full [[Expr.Grouping]]:
-    * label SETS (`by (service, dc)` — one column per label) and the
-    * `without` form (remaining-label-set groups as one canonical
-    * column), exactly the string surface's grouping semantics applied
-    * to per-window range-fn results. Emits (group cols..., timestamp,
-    * value).
-    */
-  def rangeAggregateBy(promql: String, grouping: Grouping,
-      startMs: Long, endMs: Long): DataFrame =
-    PromParser.parse(promql) match {
-      case rf @ RangeFn(_, _: MatrixSelector, _) =>
-        require(groupProjection(grouping)._1.nonEmpty,
-          "by () has no grouped form — use the ungrouped evaluation")
-        groupedVector(rf, grouping, startMs, endMs)._1
-      case other => throw new IllegalArgumentException(
-        s"rangeAggregateBy requires a range function over a matrix " +
-          s"selector, got: $other")
-    }
-
-  /** GROUPED SUBQUERY — the outer range function folding a grouped
-    * sliding inner:
-    * `subqueryRangeBy("max_over_time(rate(x[5m])[1h:5m])", by (u), ...)`
-    * = each u's peak 5-minute rate within every tumbling hour — the
-    * per-tenant alerting shape ([[queryRangeBy]]'s grouping composed
-    * with the subquery evaluation of query()'s SubqueryMatrix case).
-    *
-    * The inner range fn evaluates per (group, step) over ONE raw scan
-    * (RangeFns.sliding with the group columns — the existing
-    * (group, wstart) machinery); the derived frame is step-count ×
-    * group-count bounded (metadata-sized), and the outer fn tumbles
-    * `subRange` windows per group over it — no scan amplification, the
-    * exact property the ungrouped subquery case documents. Emits
-    * (group cols..., timestamp = outer window start, value).
-    *
-    * Scope: the inner is anything the grouped sliding evaluator
-    * accepts ([[queryRangeBy]]'s recursion — range fns over matrix
-    * selectors under instant math, scalar-literal arithmetic/
-    * comparison, binary or set composition), so the grouped and
-    * ungrouped subquery surfaces accept the SAME inner algebra.
-    */
-  def subqueryRangeBy(promql: String, grouping: Grouping,
-      startMs: Long, endMs: Long): DataFrame =
-    PromParser.parse(promql) match {
-      case RangeFn(okind, SubqueryMatrix(inner, subRange, subStep, soff),
-          oargs) =>
-        require(okind != FnAbsentOverTime,
-          "absent_over_time has no grouped form (absence is not " +
-            "attributable to a label value)")
-        val (gNames, _) = groupProjection(grouping)
-        require(gNames.nonEmpty,
-          "by () has no grouped form — use query()'s subquery")
-        // subquery offset: inner evaluated on the shifted clock,
-        // reported on the outer one. A finer `by` inner grouping
-        // evaluates per its own key and pools into the evaluation
-        // groups at the tumbling fold (round 14; the sliding
-        // subquery arm's rule)
-        val ig = finerInnerGrouping(inner, grouping)
-        val all = queryRangeBy(inner, ig,
-          startMs - soff, endMs - soff, subStep)
-        val steps = reportOnOuterClock(
-          if (ig eq grouping) all
-          else projectInnerGroups(all, ig, gNames), soff)
-        val base = steps.select(gNames.map(col) ++ Seq(
-          (col("timestamp") -
-            pmod(col("timestamp") - startMs, lit(subRange))).as("wstart"),
-          col("timestamp"), col("value").cast("double").as("value")): _*)
-        RangeFns.aggWindows(okind, base, oargs, gNames :+ "wstart",
-            RangeFns.extrapolateSpec(okind, rateMode, col("wstart"), subRange))
-          .select(gNames.map(col) ++
-            Seq(col("wstart").as("timestamp"), col("value")): _*)
-      case other => throw new IllegalArgumentException(
-        s"subqueryRangeBy requires a range function over a subquery, " +
-          s"got: $other")
-    }
 
   /** Matcher conjunction over the long-format scan — one row-local
     * predicate per matcher, Prometheus semantics (absent label ≡ "",

@@ -111,8 +111,8 @@ class CliWebSpec extends AnyFunSuite {
     // the library surface's grouped SUBQUERY over the same fixture:
     // both steps land in the one 40ms outer window at 20 — per-group
     // max of the step series above (web max(3,4)=4, mob 8)
-    val sub = new graft.tsdb.GraftDb(spark, db)
-      .subqueryRangeBy("max_over_time(sum_over_time(req[20ms])[40ms:20ms])",
+    val sub = new graft.tsdb.GraftDb(spark, db).engine()
+      .queryBy("max_over_time(sum_over_time(req[20ms])[40ms:20ms])",
         graft.tsdb.Expr.Grouping(by = true, List("service")), 20, 40)
       .orderBy("service").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))

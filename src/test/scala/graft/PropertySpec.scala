@@ -277,6 +277,44 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("queryBy per group equals query over that group's series") {
+    // random window geometry over the range fns and one subquery form:
+    // each group's rows from the grouped leaf must be exactly what the
+    // pooled evaluation answers for that group's matcher alone — any
+    // sample leaking across groups changes some group's windows
+    val caseGen = for {
+      rows <- labeledGen
+      fn <- Gen.oneOf("sum_over_time", "count_over_time", "max_over_time",
+        "rate")
+      w <- Gen.choose(5L, 60L)
+      sub <- Gen.oneOf(false, true)
+      subRange <- Gen.choose(10L, 60L)
+      subStep <- Gen.choose(5L, 30L)
+    } yield (rows, fn, w, sub, subRange, subStep)
+    for ((rows, fn, w, sub, subRange, subStep) <- samples(caseGen, 8)) {
+      val e = new TsdbEngine(spark, TsdbFixtures.longDf(
+        rows.map { case (u, t, v) => ("m", Map("u" -> u), t, v) }),
+        new StreamCatalog(Seq(StreamDef("m", Map.empty, VType.F64))))
+      def q(sel: String): String =
+        if (sub) s"max_over_time($fn($sel[${w}ms])[${subRange}ms:${subStep}ms])"
+        else s"$fn($sel[${w}ms])"
+      val grouped = e.queryBy(q("m"),
+          graft.tsdb.Expr.Grouping(by = true, List("u")), 0, 100)
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+      val ctx = s"q=${q("m")} rows=$rows"
+      assert(grouped.map(_._1).toSet.subsetOf(rows.map(_._1).toSet), ctx)
+      for (u <- rows.map(_._1).distinct) {
+        val got = grouped.filter(_._1 == u).map(r => r._2 -> r._3).toMap
+        val want = e.query(q(s"""m{u="$u"}"""), 0, 100).output.collect()
+          .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+        assert(got.keySet === want.keySet, s"u=$u $ctx")
+        got.foreach { case (t, v) =>
+          assert(math.abs(v - want(t)) < 1e-9, s"u=$u t=$t $ctx")
+        }
+      }
+    }
+  }
+
   test("grouped topk equals per-group brute-force selection") {
     for (rows <- samples(labeledGen, 6)) {
       val e = new TsdbEngine(spark, TsdbFixtures.longDf(

@@ -717,12 +717,25 @@ class EngineSpec extends AnyFunSuite {
       rows(subSlide))
     // grouped SUBQUERY over a composed inner: the outer max tumbles
     // the per-(dc, step) ratio series — one 40ms window from start 20
-    val sub = e.subqueryRangeBy(
+    val sub = e.queryBy(
       "max_over_time((sum_over_time(req[20ms]) / " +
         "count_over_time(req[20ms]))[40ms:20ms])", byDc, 20, 40)
     assert(rows(sub) == Set(
       (Some("a"), 20L, 11d / 3), (Some("b"), 20L, 10d), (None, 20L, 32d)),
       rows(sub))
+    // whole-range grouped aggregate and grouped topk over a SUBQUERY
+    // child: the inner per-(dc, 10ms step) sums over (T-20, T] are
+    // a {10: 9, 20: 11, 30: 2}, b {10: 4, 20: 20, 30: 16},
+    // null {30: 32, 40: 32}; the outer max tumbles 20ms windows from
+    // 0 — a {0: 9, 20: 11}, b {0: 4, 20: 20}, null {20: 32, 40: 32}
+    val subLeaf = "max_over_time(sum_over_time(req[20ms])[20ms:10ms])"
+    assert(groupRows(e.query(s"sum by (dc) ($subLeaf)", 0, 40).output) ==
+      Set(Some("a") -> 20d, Some("b") -> 24d, None -> 64d))
+    assert(groupRows(e.query(s"sum by (dc) ($subLeaf * 2)", 0, 40).output) ==
+      Set(Some("a") -> 40d, Some("b") -> 48d, None -> 128d))
+    // topk per dc: each dc's best window (null's two windows tie)
+    assert(groupRows(e.query(s"topk(1, $subLeaf) by (dc)", 0, 40).output) ==
+      Set(Some("a") -> 11d, Some("b") -> 20d, None -> 32d))
     // V2V comparison and arbitrary shapes still reject
     intercept[IllegalArgumentException](e.queryRangeBy(
       "sum_over_time(req[20ms]) > count_over_time(req[20ms])",
@@ -857,11 +870,14 @@ class EngineSpec extends AnyFunSuite {
     // a frame keyed by more than the evaluation's series key is neither
     // folded nor slid: count(count_values(...)) would count 1 per value
     // series, a count_values subquery would pool every value series
-    for (q <- Seq("""count(count_values("v", req))""",
+    val cvSub =
+      """max_over_time(count_values("v", sum_over_time(req[20ms]))[20ms:20ms])"""
+    for ((q, run) <- Seq("""count(count_values("v", req))""",
         """sum(count_values("v", sum by (dc) (sum_over_time(req[20ms]))))""",
-        """max_over_time(count_values("v", sum_over_time(req[20ms]))[20ms:20ms])""")) {
-      val x = intercept[IllegalArgumentException](
-        e.queryRange(q, 20, 40, 20).output.collect())
+        cvSub).map(q => q -> (() => e.queryRange(q, 20, 40, 20).output.collect())) :+
+        // the whole-range subquery shares the sliding subquery's inner
+        (cvSub -> (() => e.query(cvSub, 20, 40).output.collect()))) {
+      val x = intercept[IllegalArgumentException](run())
       assert(x.getMessage.contains("count_values keys its series by VALUE"),
         s"$q: ${x.getMessage}")
     }

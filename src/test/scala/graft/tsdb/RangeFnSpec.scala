@@ -174,25 +174,26 @@ class RangeFnSpec extends AnyFunSuite {
       0L, 100L, 10L)).toMap === Map(0L -> 1.0))
   }
 
-  test("rangeAggregateBy: per-group windows see only that group's samples") {
+  test("queryBy: per-group windows see only that group's samples") {
     // two labeled series sharing the name: a=(5,10)(15,20), b=(5,100)
     val rows = Seq(
       ("m", Map("u" -> "a"), 5L, 10d), ("m", Map("u" -> "a"), 15L, 20d),
       ("m", Map("u" -> "b"), 5L, 100d))
     val e = new TsdbEngine(spark, longDf(rows),
       new StreamCatalog(Seq(StreamDef("m", Map.empty, VType.F64))))
-    val sums = e.rangeAggregateBy("sum_over_time(m[30ms])", "u", 0L, 100L)
+    val byU = Expr.Grouping(by = true, List("u"))
+    val sums = e.queryBy("sum_over_time(m[30ms])", byU, 0L, 100L)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(sums.toSet === Set(("a", 0L, 30.0), ("b", 0L, 100.0)))
     // pair kinds stay within the group: only a has two samples
-    val rates = e.rangeAggregateBy("rate(m[30ms])", "u", 0L, 100L)
+    val rates = e.queryBy("rate(m[30ms])", byU, 0L, 100L)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(rates.toSet === Set(("a", 0L, 1000.0))) // +10 over 10ms
     intercept[IllegalArgumentException] {
-      e.rangeAggregateBy("absent_over_time(m[30ms])", "u", 0L, 100L)
+      e.queryBy("absent_over_time(m[30ms])", byU, 0L, 100L)
     }
     intercept[IllegalArgumentException] {
-      e.rangeAggregateBy("sum(m)", "u", 0L, 100L)
+      e.queryBy("sum(m)", byU, 0L, 100L)
     }
     // grouped × sliding: per-group lookback windows at each step
     val slid = e.queryRangeBy("sum_over_time(m[30ms])",
@@ -253,14 +254,14 @@ class RangeFnSpec extends AnyFunSuite {
     val e = new TsdbEngine(spark, longDf(rows),
       new StreamCatalog(Seq(StreamDef("m", Map.empty, VType.F64))))
     // multi-label tumbling: one column per label, per-(tuple, window)
-    val multi = e.rangeAggregateBy("sum_over_time(m[30ms])",
+    val multi = e.queryBy("sum_over_time(m[30ms])",
         Expr.Grouping(by = true, List("u", "dc")), 0L, 100L)
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
     assert(multi.toSet === Set(("a", "x", 0L, 10d), ("a", "y", 0L, 20d),
       ("b", "x", 0L, 100d)))
     // without-form: remaining-label-set groups (canonical string)
-    val wo = e.rangeAggregateBy("sum_over_time(m[30ms])",
+    val wo = e.queryBy("sum_over_time(m[30ms])",
         Expr.Grouping(by = false, List("dc")), 0L, 100L)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(wo.toSet === Set(("u=a", 0L, 30d), ("u=b", 0L, 100d)))
@@ -273,7 +274,7 @@ class RangeFnSpec extends AnyFunSuite {
       ("a", "x", 10L, 10d), ("b", "x", 10L, 100d),
       ("a", "x", 20L, 10d), ("a", "y", 20L, 20d), ("b", "x", 20L, 100d)))
     // by () refuses toward the ungrouped evaluation
-    intercept[IllegalArgumentException](e.rangeAggregateBy(
+    intercept[IllegalArgumentException](e.queryBy(
       "sum_over_time(m[30ms])", Expr.Grouping(by = true, Nil), 0L, 100L))
     intercept[IllegalArgumentException](e.queryRangeBy(
       "sum_over_time(m[30ms])", Expr.Grouping(by = true, Nil), 0L, 20L, 10L))
@@ -289,11 +290,11 @@ class RangeFnSpec extends AnyFunSuite {
       ("m", Map("u" -> "b"), 5L, 100d))
     val e = new TsdbEngine(spark, longDf(rows),
       new StreamCatalog(Seq(StreamDef("m", Map.empty, VType.F64))))
-    val g = e.rangeAggregateBy("sum_over_time(m[30ms] @ 0 offset 10ms)",
-      "u", 0L, 100L).collect()
+    val g = e.queryBy("sum_over_time(m[30ms] @ 0 offset 10ms)",
+      Expr.Grouping(by = true, List("u")), 0L, 100L).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(g.toSet === Set(("a", 0L, 20.0))) // t=5 samples gone, b empty
-    val agg = e.aggregateBy("m @ 0 offset 10ms", Expr.AggSum, "u", 0L, 100L)
+    val agg = e.query("sum by (u) (m @ 0 offset 10ms)", 0L, 100L).output
       .collect().map(r => (r.getString(0), r.getDouble(1)))
     assert(agg.toSet === Set(("a", 20.0)))
     val slid = e.queryRangeBy("sum_over_time(m[30ms] @ 0 offset 10ms)",
@@ -303,7 +304,7 @@ class RangeFnSpec extends AnyFunSuite {
       ("a", 20L, 20.0), ("a", 30L, 20.0))) // only t=15 survives
   }
 
-  test("aggregateBy is the string surface's `kind by (label)` for every kind") {
+  test("grouped aggregate answers `kind by (label)` for every kind") {
     // two labeled series sharing the name: a=(5,10)(15,20), b=(5,100)
     val rows = Seq(
       ("m", Map("u" -> "a"), 5L, 10d), ("m", Map("u" -> "a"), 15L, 20d),
@@ -312,8 +313,7 @@ class RangeFnSpec extends AnyFunSuite {
       new StreamCatalog(Seq(StreamDef("m", Map.empty, VType.F64))))
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getDouble(1))).toSet
-    val sd = pairs(e.aggregateBy("m", Expr.AggStddev, "u", 0L, 100L))
-    assert(sd === pairs(e.query("stddev by (u) (m)", 0L, 100L).output))
+    val sd = pairs(e.query("stddev by (u) (m)", 0L, 100L).output)
     assert(sd === Set(("a", 5.0), ("b", 0.0)))
   }
 
